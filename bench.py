@@ -164,10 +164,10 @@ def _materialize(df) -> None:
 _SCALE_SCRIPT = r"""
 import sys, time, os
 sys.path.insert(0, {repo!r})
-from promptner_spark.session import build_session
+from promptner_spark.session import build_session, driver_mem
 from promptner_spark.plans.pipeline import build_pipeline
 extra = {{"spark.driver.extraJavaOptions":
-         "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "24g")}}
+         "-Xms" + driver_mem()}}
 local_dir = {local_dir!r}
 if local_dir:
     extra["spark.local.dir"] = local_dir
@@ -198,10 +198,10 @@ spark.stop()
 _CALIB_SCRIPT = r"""
 import sys, time, os
 sys.path.insert(0, {repo!r})
-from promptner_spark.session import build_session
+from promptner_spark.session import build_session, driver_mem
 from pyspark.sql import functions as F
 extra = {{"spark.driver.extraJavaOptions":
-         "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "24g")}}
+         "-Xms" + driver_mem()}}
 local_dir = {local_dir!r}
 if local_dir:
     extra["spark.local.dir"] = local_dir
@@ -257,11 +257,11 @@ def _median(xs: list[float]) -> float:
 _PY_CALIB_SCRIPT = r"""
 import sys, time, os
 sys.path.insert(0, {repo!r})
-from promptner_spark.session import build_session
+from promptner_spark.session import build_session, driver_mem
 from pyspark.sql import functions as F
 import pandas as pd
 extra = {{"spark.driver.extraJavaOptions":
-         "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "24g")}}
+         "-Xms" + driver_mem()}}
 local_dir = {local_dir!r}
 if local_dir:
     extra["spark.local.dir"] = local_dir
@@ -336,7 +336,7 @@ def _pipeline_times(cores: int, sf_dir: str, replicate: int) -> list[float]:
 
 
 def main() -> None:
-    from promptner_spark.session import build_session
+    from promptner_spark.session import build_session, driver_mem
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else 0.1
@@ -366,7 +366,7 @@ def main() -> None:
         py_ceiling = _py_calibration(SCALE_LO, SCALE_HI)
 
     extra = {"spark.driver.extraJavaOptions":
-             "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "24g")}
+             "-Xms" + driver_mem()}
     if _fast_local_dir():
         extra["spark.local.dir"] = _fast_local_dir()
     spark = build_session(cores=CPUS, app_name="bench", extra_conf=extra)

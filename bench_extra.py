@@ -58,10 +58,10 @@ def main() -> None:
     if not names:
         names = list(HEADLINE)
 
-    from promptner_spark.session import build_session
+    from promptner_spark.session import build_session, driver_mem
 
     extra = {"spark.driver.extraJavaOptions":
-             "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "24g")}
+             "-Xms" + driver_mem()}
     if _fast_local_dir():
         extra["spark.local.dir"] = _fast_local_dir()
     if want_stages:

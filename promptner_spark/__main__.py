@@ -67,13 +67,18 @@ def main(argv: list[str] | None = None) -> dict:
     # job over kilobyte tables) — not count re-scans of the
     # just-written stages, which on a real corpus would be six extra
     # full parquet reads (r4 verdict)
-    from .plans.checkpoint import stage_row_counts
+    from .plans.checkpoint import stage_row_counts, stage_walls_ms
     summary = {
         "checkpoint": args.checkpoint,
         "stages": stage_row_counts(
             spark, args.checkpoint,
             ["pages", "sentences", "mentions", "nodes",
              "triples", "triple_counts"]),
+        # per-stage write walls from the completion markers (no job)
+        "stage_wall_ms": stage_walls_ms(
+            args.checkpoint,
+            ["pages", "sentences", "mentions", "aliases", "linked",
+             "nodes", "triples", "triple_counts"]),
     }
     print(json.dumps(summary))
     return summary

@@ -13,16 +13,22 @@ mention surface → canonical entity, three strategies composed:
    (enabled in session.py) covers the sort-merge case at runtime.
 3. **MinHash-LSH candidates (J2)** — surfaces missed by the exact
    alias key are blocked by character-shingle MinHash bands
-   (functions/hashing.py) and joined on band buckets, then verified by
-   Jaccard; this is a bounded-fanout equi-join, never a cross join.
+   (functions/hashing.py), and their bands are joined to the alias
+   bands by a broadcast hash join (the alias side is dictionary-sized,
+   so the vocabulary side never shuffles on band keys), then verified
+   by true Jaccard; a bounded-fanout equi-join, never a cross join.
+   Exact hits, verified candidates and the NIL fallback are ranked in
+   ONE ``groupBy(m_norm)`` — the only shuffle of the resolution pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import schema
-from ..functions.hashing import char_shingles, fast_minhash_bands, jaccard
+from ..functions.hashing import (
+    char_shingles, fast_minhash_bands, jaccard, minhash_bands,
+)
 from .gazetteer import ALIAS_ROWS
 
 _PUNCT_CLASS = r"^[!-/:-@\[-`{-~\s]+|[!-/:-@\[-`{-~\s]+$"
@@ -96,51 +102,50 @@ def link_fuzzy_candidates(
     min_jaccard: float = 0.5,
     portable: bool = False,
 ) -> DataFrame:
-    """J2: MinHash-LSH candidate generation for surfaces with no exact
-    alias hit, verified by true Jaccard. Join key is (band_id,
-    band_hash) — bounded fanout, shuffle only on bucket keys.
+    """J2: MinHash-LSH candidates for surfaces with no exact alias hit:
+    every (m_norm, alias) pair that shares a band and has true Jaccard
+    ≥ ``min_jaccard``, once — columns (m_norm, entity_id,
+    canonical_name, alias_norm, jaccard). :func:`build_resolution`
+    picks the best per surface.
 
-    The expensive part (shingling + n_hashes minhash permutations) is
-    computed once per DISTINCT normalized surface, never per mention
-    occurrence — the surface vocabulary is orders of magnitude smaller
-    than the mention stream at web scale (Zipf), so this turns an
-    O(mentions) hash bill into an O(vocab) one. Output: one best
-    candidate per distinct ``m_norm``; callers join it back on the
-    norm key.
+    ``unlinked`` holds DISTINCT surfaces (a vocabulary, never the
+    mention stream). Shingles and bands are computed once per row on
+    each side; the shingles ride through the join into the verify.
+    The alias bands are broadcast, so the band join never shuffles,
+    and a pair is kept only at its FIRST shared band, so no distinct.
 
     ``portable=True`` switches the band-hash family from xxhash64 to
     the md5 family a DuckDB oracle can replay exactly (same firewall
     as :func:`fuzzy_surface_pairs`); the banding is an LSH config, not
     a semantics change, and all work here is O(vocab)."""
-    from ..functions.hashing import minhash_bands
+    # One shingle and one band expression, applied to both sides:
+    # building either is hundreds of py4j round trips of driver time.
+    sh = char_shingles(F.col("key"), shingle_k)
+    bands = (minhash_bands if portable else fast_minhash_bands)(
+        F.col("sh"), n_hashes, band_size)
 
-    vocab = unlinked.select(
-        norm_surface(F.col("surface")).alias("m_norm")).distinct()
-    bands_fn = minhash_bands if portable else fast_minhash_bands
+    def banded(df: DataFrame, key: str, p: str) -> DataFrame:
+        # _outer: a plain posexplode infers a size(bands) > 0 filter
+        # that Catalyst pushes below the exact join, banding hits too
+        # (the band array is never empty, so the rows are the same)
+        return df.withColumn("sh", sh).withColumn("bands", bands).select(
+            *[c for c in df.columns if c != "key"], F.col("key").alias(key),
+            F.col("sh").alias(f"{p}_sh"), F.col("bands").alias(f"{p}_bands"),
+            F.posexplode_outer("bands").alias("band_id", "band_hash"))
 
-    def with_bands(df: DataFrame, col: str, out: str) -> DataFrame:
-        sh = char_shingles(F.col(col), shingle_k)
-        return df.withColumn(out, bands_fn(sh, n_hashes, band_size))
-
-    m = with_bands(vocab, "m_norm", "m_bands").select(
-        "m_norm", F.posexplode("m_bands").alias("band_id", "band_hash"))
-
-    a = with_bands(aliases, "alias_norm", "a_bands").select(
-        "alias_norm", "entity_id", "canonical_name",
-        F.posexplode("a_bands").alias("band_id", "band_hash"))
-
-    cand = m.join(a, ["band_id", "band_hash"]).dropDuplicates(
-        ["m_norm", "entity_id"])
-    sim = jaccard(char_shingles(F.col("m_norm"), shingle_k),
-                  char_shingles(F.col("alias_norm"), shingle_k))
+    m = banded(unlinked.select(
+        norm_surface(F.col("surface")).alias("key")), "m_norm", "m")
+    a = banded(aliases.select(
+        F.col("alias_norm").alias("key"), "entity_id", "canonical_name"),
+        "alias_norm", "a")
+    first_shared = F.array_position(
+        F.zip_with("m_bands", "a_bands", lambda x, y: x == y), True) - 1
     return (
-        cand.withColumn("jaccard", sim)
+        m.join(F.broadcast(a), ["band_id", "band_hash"])
+        .where(F.col("band_id") == first_shared)
+        .select("m_norm", "entity_id", "canonical_name", "alias_norm",
+                jaccard(F.col("m_sh"), F.col("a_sh")).alias("jaccard"))
         .where(F.col("jaccard") >= min_jaccard)
-        # best candidate per surface: highest jaccard, entity_id tiebreak
-        .withColumn("rk", F.row_number().over(
-            Window.partitionBy("m_norm")
-            .orderBy(F.desc("jaccard"), F.asc("entity_id"))))
-        .where(F.col("rk") == 1).drop("rk")
     )
 
 
@@ -164,8 +169,6 @@ def fuzzy_surface_pairs(
     magnitude below the corpus). ``portable=True`` switches to the
     md5 hash family a DuckDB oracle can replay; the default xxhash64
     family is the production path (same firewall as fuzzy linking)."""
-    from ..functions.hashing import fast_minhash_bands, minhash_bands
-
     bands_fn = minhash_bands if portable else fast_minhash_bands
     sh = char_shingles(F.col(col), shingle_k)
     b = vocab.select(
@@ -210,13 +213,13 @@ def _enrich_resolution(out: DataFrame) -> DataFrame:
     from .triples import NIL_ID_OFFSET
 
     ename = F.coalesce(F.col("canonical_name"), F.col("m_norm"))
-    return out.withColumn("entity_name", ename).withColumn(
-        "entity_key",
+    return out.select(
+        "*", ename.alias("entity_name"),
         F.when(F.col("entity_id").isNotNull(), F.col("entity_id"))
         .otherwise(NIL_ID_OFFSET
                    + F.pmod(portable_hash(F.col("m_norm")),
-                            F.lit(NIL_ID_OFFSET))),
-    ).withColumn("eid", F.xxhash64("entity_name"))
+                            F.lit(NIL_ID_OFFSET))).alias("entity_key"),
+        F.xxhash64(ename).alias("eid"))
 
 
 def build_resolution(mentions: DataFrame, aliases: DataFrame,
@@ -224,7 +227,8 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
                      portable_fuzzy: bool = False) -> DataFrame:
     """Surface-vocabulary resolution dictionary: one row per distinct
     normalized surface, with its resolved entity (exact alias match
-    first, MinHash-LSH fuzzy fallback) or NULLs for NIL surfaces.
+    first, else the MinHash-LSH candidate with the highest Jaccard over
+    every alias, lowest entity_id on a tie) or NULLs for NIL surfaces.
 
     Columns: (m_norm, entity_id, canonical_name, alias_norm, prior,
     entity_name, entity_key, eid) — the last three precomputed
@@ -236,8 +240,8 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     for caller-protocol compatibility (:func:`release_caches`).
     """
     # Materialized eagerly (one vocabulary-sized job): (a) the
-    # vocabulary is read by the exact, fuzzy and NIL branches — one
-    # distinct pass over the mention stream instead of three; (b) the
+    # vocabulary is read by the exact/NIL and the fuzzy branches — one
+    # distinct pass over the mention stream instead of two; (b) the
     # boundary is a predicate-pushdown barrier — without it Catalyst
     # pushes the fuzzy join's isnotnull(band_hash) condition through
     # the posexplode and BELOW this aggregate, re-evaluating the whole
@@ -258,46 +262,39 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
         exact = _enrich_resolution(exact)
         exact._promptner_caches = ()  # type: ignore[attr-defined]
         return exact
-    hit = exact.where(F.col("entity_id").isNotNull())
-    miss = exact.where(F.col("entity_id").isNull()).select("m_norm")
+    # One min per surface over the pick key (rank, -jaccard, entity_id,
+    # canonical_name, alias_norm) resolves the whole dictionary: the
+    # exact hit (rank 0), else the best verified alias over EVERY alias
+    # (rank 1), else the NIL row (rank 2). Fuzzy rows carry no prior,
+    # which is how callers tell them from exact hits.
+    hit = F.col("entity_id").isNotNull()
+
+    def pick(rank, neg_jaccard, prior) -> F.Column:
+        return F.struct(rank.alias("rank"), neg_jaccard.alias("neg_j"),
+                        "entity_id", "canonical_name", "alias_norm",
+                        prior.alias("prior")).alias("pick")
+
+    ranked = exact.select("m_norm", pick(
+        F.when(hit, 0).otherwise(2), F.lit(-1.0), F.col("prior")))
     fz = link_fuzzy_candidates(
-        miss.withColumnRenamed("m_norm", "surface"), aliases,
-        portable=portable_fuzzy,
-    ).withColumn("prior", F.lit(None).cast("double")) \
-        .select("m_norm", "entity_id", "canonical_name", "alias_norm", "prior")
-    # fz (one row per fuzzy-matched surface) is a SUBSET of the
-    # resolution dictionary this function returns — which
-    # link_mentions broadcasts wholesale onto the mention stream (with
-    # the max_broadcast_vocab guard), so broadcasting it here is never
-    # the binding constraint. The planner cannot see that: the
-    # checkpointed vocab side has no size stats, and without the hint
-    # this anti-join planned as a SortMergeJoin (2 exchanges + 2 sorts
-    # observed in the r6 flagship audit, for a 7-row right side).
-    nil = miss.join(F.broadcast(fz.select("m_norm")),
-                    "m_norm", "left_anti").select(
-        "m_norm",
-        F.lit(None).cast("long").alias("entity_id"),
-        F.lit(None).cast("string").alias("canonical_name"),
-        F.lit(None).cast("string").alias("alias_norm"),
-        F.lit(None).cast("double").alias("prior"),
-    )
+        exact.where(~hit).select(F.col("m_norm").alias("surface")),
+        aliases, portable=portable_fuzzy,
+    ).select("m_norm", pick(F.lit(1), -F.col("jaccard"),
+                            F.lit(None).cast("double")))
     out = _enrich_resolution(
-        hit.select("m_norm", "entity_id", "canonical_name",
-                   "alias_norm", "prior").unionByName(fz).unionByName(nil))
-    # Persisted + eagerly filled: the dictionary is read by the main
-    # broadcast-back join AND by the (vocab-sized) eid→name dictionary
-    # emit_triples uses to reattach names post-aggregation — without
-    # the boundary the multi-stage fuzzy chain above would re-run per
-    # consumer, each re-run a string of tiny serial stages that dilute
-    # scaling (Amdahl) at high parallelism.
-    # coalesce BEFORE persisting: the three-way union otherwise caches
-    # the SUM of its children's shuffle partitions (3 x
-    # shuffle.partitions — 192 near-empty partitions here), and every
-    # downstream scan of the cache launches that many tasks (r6 stage
-    # audit: three 192-task stages of pure task-launch overhead per
-    # flagship run). coalesce is narrow (no exchange); the dictionary
-    # is vocabulary-sized, so defaultParallelism partitions is the
-    # right ceiling at any scale.
+        ranked.unionByName(fz).groupBy("m_norm")
+        .agg(F.min("pick").alias("pick"))
+        .select("m_norm", "pick.entity_id", "pick.canonical_name",
+                "pick.alias_norm", "pick.prior"))
+    # Eagerly filled: the dictionary is read by the main broadcast-back
+    # join AND by the (vocab-sized) eid→name dictionary emit_triples
+    # uses to reattach names post-aggregation — without the boundary
+    # the resolution pass would re-run per consumer. coalesce before
+    # the checkpoint: the groupBy leaves shuffle.partitions near-empty
+    # partitions, and every downstream scan of the dictionary would
+    # launch that many tasks. coalesce is narrow (no exchange); the
+    # dictionary is vocabulary-sized, so defaultParallelism partitions
+    # is the right ceiling at any scale.
     out = out.coalesce(out.sparkSession.sparkContext.defaultParallelism)
     out = out.localCheckpoint(eager=True)
     out._promptner_caches = ()  # type: ignore[attr-defined]

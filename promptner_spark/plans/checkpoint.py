@@ -129,3 +129,15 @@ def stage_row_counts(spark: SparkSession, root: str,
         .collect())
     got = {r["stage"]: int(r["n"]) for r in rows}
     return {s: got.get(s, 0) for s in stages}
+
+
+def stage_walls_ms(root: str, stages: list[str]) -> dict[str, int]:
+    """Stage → the wall (ms) its write recorded in ``_SUCCESS_STAGE``;
+    stages without a marker are left out. A resumed stage keeps the
+    wall of the run that wrote it."""
+    out = {}
+    for stage in stages:
+        if stage_is_complete(root, stage):
+            with open(_marker(root, stage)) as fh:
+                out[stage] = int(json.load(fh)["wall_ms"])
+    return out

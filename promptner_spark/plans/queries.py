@@ -1901,12 +1901,13 @@ def _sql_pipeline_triples(sent_tokens: int = 25) -> str:
     - ``spans``: oracle/spans.py::tags_to_mentions — B starts a span,
       I continues iff the previous token carried the same type
       (orphan I starts a new span).
-    - ``vocab``→``res``: operators/linking.py::build_resolution —
-      exact broadcast alias join, then MinHash-LSH fuzzy fallback
-      (md5 band family, portable_fuzzy) with true-Jaccard ≥ 0.5
-      verify and (jaccard DESC, entity_id ASC) best-candidate pick;
-      NIL surfaces canonicalize to their normalized surface
-      (operators/triples.py::canonicalize).
+    - ``vocab``→``res`` (:func:`_sql_resolution_ctes`):
+      operators/linking.py::build_resolution — exact broadcast alias
+      join, then MinHash-LSH fuzzy fallback (md5 band family,
+      portable_fuzzy) with true-Jaccard ≥ 0.5 verify. Every alias of
+      every entity that shares a band is scored, and the pick is
+      jaccard DESC, then entity_id ASC; NIL surfaces canonicalize to
+      their normalized surface (operators/triples.py::canonicalize).
     - ``pairs``: triples.py::emit_triples / triple_counts — distinct
       canonical names per sentence, unordered pairs subj < obj,
       n_sents = co-occurring sentence count, n_docs = distinct urls.
@@ -1916,8 +1917,6 @@ def _sql_pipeline_triples(sent_tokens: int = 25) -> str:
     gaz_vals = ", ".join(
         f"('{s}', '{t}', {i}, {len(s.split(' '))})"
         for i, (s, t) in enumerate(GAZETTEER.items()))
-    bands_vals = ", ".join(
-        f"({i}, {b})" for i, b in enumerate(_sql_char_minhash_bands()))
     k = sent_tokens
     return f"""
 WITH pages AS (
@@ -2005,7 +2004,28 @@ ments AS (
          {_sql_norm_surface("string_agg(token, ' ' ORDER BY pos)")} AS m_norm
   FROM spans GROUP BY url, sent_id, span_id),
 vocab AS (SELECT DISTINCT m_norm FROM ments),
-exact AS (
+{_sql_resolution_ctes()},
+sent_ents AS (
+  SELECT DISTINCT m.url, m.sent_id, r.entity_name
+  FROM ments m JOIN res r ON r.m_norm = m.m_norm),
+pairs AS (
+  SELECT a.entity_name AS subj, b.entity_name AS obj, a.url
+  FROM sent_ents a JOIN sent_ents b
+    ON a.url = b.url AND a.sent_id = b.sent_id
+   AND a.entity_name < b.entity_name)
+SELECT subj, 'cooccurs_with' AS pred, obj,
+       count(*) AS n_sents, count(DISTINCT url) AS n_docs
+FROM pairs GROUP BY subj, obj"""
+
+
+def _sql_resolution_ctes() -> str:
+    """The oracle's linking CTEs ``exact``→``fz``→``res`` over a
+    ``vocab(m_norm)`` and an ``aliases`` relation: the closed form of
+    operators/linking.py::build_resolution with the md5 band family
+    (``portable_fuzzy``). ``res`` holds (m_norm, entity_name)."""
+    bands_vals = ", ".join(
+        f"({i}, {b})" for i, b in enumerate(_sql_char_minhash_bands()))
+    return f"""exact AS (
   SELECT v.m_norm, a.entity_id, a.canonical_name
   FROM vocab v LEFT JOIN aliases a ON v.m_norm = a.alias_norm),
 msh AS (SELECT m_norm, {_sql_char_shingles('m_norm')} AS sh
@@ -2038,18 +2058,7 @@ res AS (
   SELECT e.m_norm,
          coalesce(e.canonical_name, f.canonical_name, e.m_norm)
            AS entity_name
-  FROM exact e LEFT JOIN fz f ON f.m_norm = e.m_norm),
-sent_ents AS (
-  SELECT DISTINCT m.url, m.sent_id, r.entity_name
-  FROM ments m JOIN res r ON r.m_norm = m.m_norm),
-pairs AS (
-  SELECT a.entity_name AS subj, b.entity_name AS obj, a.url
-  FROM sent_ents a JOIN sent_ents b
-    ON a.url = b.url AND a.sent_id = b.sent_id
-   AND a.entity_name < b.entity_name)
-SELECT subj, 'cooccurs_with' AS pred, obj,
-       count(*) AS n_sents, count(DISTINCT url) AS n_docs
-FROM pairs GROUP BY subj, obj"""
+  FROM exact e LEFT JOIN fz f ON f.m_norm = e.m_norm)"""
 
 
 def q_verified_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:

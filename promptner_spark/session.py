@@ -42,6 +42,28 @@ ARROW_BATCH_ROWS = 4096
 DRIVER_JVM_FLAGS = "-XX:+AlwaysPreTouch -XX:ReservedCodeCacheSize=2g"
 
 
+def driver_mem() -> str:
+    """The driver heap: ``$SPARK_DRIVER_MEM`` when set, else 40% of the
+    host's ``MemTotal``, capped at 24g.
+
+    Single-JVM local mode, so this heap also runs every task. At 32
+    concurrent tasks an 8g heap GC-thrashes (measured: +60% wall at
+    local[32], none at local[8]), which is where the 24g cap comes
+    from (a 128 GiB host). A fixed 24g on a smaller host lets the JVM
+    grow past physical memory and the kernel OOM-kills it; 40% leaves
+    room for the Python workers and off-heap buffers beside it."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f
+                       if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, kib * 2 // 5 // 1024)}m"
+
+
 def build_session(
     cores: int | None = None,
     app_name: str = "promptner_spark",
@@ -95,13 +117,10 @@ def build_session(
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.ui.enabled": "false",
-        # Single-JVM local mode: the driver heap IS the executor heap.
-        # At 32 concurrent tasks the allocation rate is 4x the 8-core
-        # rate and an 8g heap GC-thrashes (measured: +60% wall at
-        # local[32], none at local[8]); 24g removes that drag on this
-        # 128 GiB box. On a real cluster this maps to executor memory
-        # sized to partition volume, not a driver setting.
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "24g"),
+        # Single-JVM local mode: the driver heap IS the executor heap
+        # (see driver_mem). On a real cluster this maps to executor
+        # memory sized to partition volume, not a driver setting.
+        "spark.driver.memory": driver_mem(),
         "spark.driver.extraJavaOptions": DRIVER_JVM_FLAGS,
     }
     if extra_conf:

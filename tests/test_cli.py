@@ -42,6 +42,15 @@ def test_cli_parquet_run_and_resume(spark, sf_dir, tmp_path):
                "--checkpoint", ckpt, "--shuffle-partitions", "4"])
     assert s2["stages"] == s1["stages"]
 
+    # per-stage walls from the _SUCCESS_STAGE markers: every stage,
+    # non-negative, and a resume reports the walls of the run that
+    # wrote the stages
+    for s in (s1, s2):
+        walls = s["stage_wall_ms"]
+        assert set(s["stages"]) <= set(walls)
+        assert all(isinstance(v, int) and v >= 0 for v in walls.values())
+    assert s2["stage_wall_ms"] == s1["stage_wall_ms"]
+
 
 def test_cli_warc_ingest(spark, tmp_path):
     from promptner_spark.__main__ import main
