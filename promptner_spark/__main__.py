@@ -46,10 +46,11 @@ def main(argv: list[str] | None = None) -> dict:
     args = ap.parse_args(argv)
 
     from .plans.pipeline import run_pipeline
-    from .session import build_session
+    from .session import build_session, codegen_compiled
 
     spark = build_session(cores=args.cores, app_name="promptner_kg",
                           shuffle_partitions=args.shuffle_partitions)
+    compiled0 = codegen_compiled(spark)
     pages_source = None
     if args.warc:
         from .sources.warc import pages_from_warc
@@ -80,6 +81,12 @@ def main(argv: list[str] | None = None) -> dict:
             ["pages", "sentences", "mentions", "aliases", "linked",
              "nodes", "triples", "triple_counts"]),
     }
+    # classes Spark compiled for this run and the time it took (the
+    # JVM's counters, so a session reused across runs reports only
+    # this run's share)
+    classes, secs = (b - a for a, b in zip(compiled0, codegen_compiled(spark)))
+    summary["codegen"] = {"classes": classes,
+                          "compile_ms": round(secs * 1e3)}
     print(json.dumps(summary))
     return summary
 

@@ -77,13 +77,16 @@ def connected_components(
         if checkpoint:
             new_labels = new_labels.localCheckpoint(eager=True)
         # fixpoint test every check_every rounds (exact: two
-        # consecutive identical label tables ⇒ converged)
+        # consecutive identical label tables ⇒ converged). No
+        # limit(1): Spark names a generated limit's counter from a
+        # JVM-wide sequence, so that plan compiled new classes on
+        # every call
         if it % check_every == check_every - 1 or it == max_iter - 1:
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
                 .where(F.col("n.comp") != F.col("o.comp"))
-                .limit(1).count()
+                .count()
             )
             if changed == 0:
                 labels = new_labels

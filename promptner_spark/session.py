@@ -41,6 +41,22 @@ ARROW_BATCH_ROWS = 4096
 # (hundreds of distinct generated whole-stage classes).
 DRIVER_JVM_FLAGS = "-XX:+AlwaysPreTouch -XX:ReservedCodeCacheSize=2g"
 
+# Capacity of Spark's compiled-class cache
+# (``spark.sql.codegen.cache.maxEntries``, default 100). An evicted
+# class is compiled again on its next use, and the JVM then JIT-compiles
+# the fresh class again too. Measured with tools/codegen_working_set.py
+# at sf0.01 on a 4-core host: the 52-query registry compiles 881
+# distinct classes in one pass, and q_prep alone 101 in a fresh session.
+# At the default, q_prep's second and third runs in one session
+# recompiled 64 and 61 classes (sf0.001) and the registry's second pass
+# recompiled 760; at 2048 the q_prep runs compile 0 and that pass 26,
+# all from plans that AQE builds differently from run to run. The
+# generated code is a function of the plan, not the data, so the
+# working set does not grow with the input. Static conf: it takes
+# effect only when build_session launches the JVM; a session that
+# already exists keeps the value it was started with.
+CODEGEN_CACHE_ENTRIES = 2048
+
 
 def driver_mem() -> str:
     """The driver heap: ``$SPARK_DRIVER_MEM`` when set, else 40% of the
@@ -112,6 +128,7 @@ def build_session(
         # the PLAN, not the input, so this holds on any cluster.
         "spark.sql.codegen.hugeMethodLimit":
             os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
@@ -138,3 +155,20 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiled(spark: SparkSession) -> tuple[int, float]:
+    """Classes Spark has compiled in this JVM since it started, and the
+    seconds spent compiling them. Callers take differences.
+
+    The class count is the count of ``CodegenMetrics``' compile-time
+    histogram, updated once per cache miss. The seconds come from
+    ``CodeGenerator.compileTime`` (a nanosecond sum updated beside it),
+    because the histogram keeps only a decaying sample of ~1000 values
+    and count x mean drifts once more classes than that are compiled."""
+    jvm = spark.sparkContext._jvm
+    hist = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME())
+    ns = (jvm.org.apache.spark.sql.catalyst.expressions.codegen
+          .CodeGenerator.compileTime())
+    return int(hist.getCount()), ns / 1e9

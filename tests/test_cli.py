@@ -51,6 +51,12 @@ def test_cli_parquet_run_and_resume(spark, sf_dir, tmp_path):
         assert all(isinstance(v, int) and v >= 0 for v in walls.values())
     assert s2["stage_wall_ms"] == s1["stage_wall_ms"]
 
+    # codegen compiled during each run, from the JVM's counters
+    for s in (s1, s2):
+        cg = s["codegen"]
+        assert set(cg) == {"classes", "compile_ms"}
+        assert all(isinstance(v, int) and v >= 0 for v in cg.values())
+
 
 def test_cli_warc_ingest(spark, tmp_path):
     from promptner_spark.__main__ import main
