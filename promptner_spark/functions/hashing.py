@@ -130,17 +130,6 @@ def _seeded_min(shingles: Column, seed: int) -> Column:
     return F.array_min(F.transform(shingles, body))
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
-    """Array of ``n_hashes`` min-hash values over a shingle array —
-    one `array_min(transform(...))` per permutation, all codegen'd.
-
-    Expression form: fine for SHORT arrays (entity surfaces in fuzzy
-    linking). For document corpora use
-    operators/dedup.py::minhash_signatures — the explode/aggregate
-    formulation that evaluates each hash exactly once."""
-    return F.array(*[_seeded_min(shingles, i) for i in range(n_hashes)])
-
-
 def minhash_bands(shingles: Column, n_hashes: int = 16,
                   band_size: int = 4) -> Column:
     """LSH band digests: md5 over each ``band_size`` slice of the

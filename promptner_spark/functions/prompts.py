@@ -1,18 +1,16 @@
 """Prompt-construction operators C1-C3, C7, C8 (SURVEY.md §2.3).
 
 The reference assembles prompts by string concatenation on a mutable
-``Algorithm`` object (`algorithms.py:186-219,453-541`). Spark-first,
-the prompt template is resolved ONCE at the driver into an immutable
-:class:`PromptSpec` whose constant parts become `F.lit` prefixes —
-Catalyst constant-folds them, and the per-row work is a single
-`concat` inside whole-stage codegen. No Python runs per row.
+``Algorithm`` object (`algorithms.py:186-219,453-541`). Here the
+prompt template is resolved ONCE at the driver into an immutable
+:class:`PromptSpec` (or :class:`VerifySpec`); the fused extraction and
+verification ``mapInPandas`` stages close over it, so the constant
+template travels once per task and only the paragraph varies per row.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-from pyspark.sql import Column, functions as F
 
 # Template fragments mirroring the reference's Config strings
 # (`algorithms.py:426-552`): a task definition, a format instruction,
@@ -162,12 +160,6 @@ def set_config(
         whole_task=task)
 
 
-def completion_prompt(spec: PromptSpec, text: Column) -> Column:
-    """C2: ``prefix + paragraph + " \\nAnswer:"`` as one codegen'd
-    concat (`algorithms.py:192-194`)."""
-    return F.concat(F.lit(spec.prefix()), text, F.lit(PromptSpec.SUFFIX))
-
-
 @dataclass(frozen=True)
 class VerifySpec:
     """C7/C8 prompt configuration — the reference ``set_config``
@@ -219,25 +211,6 @@ def dispute_prompt_str(text: str, surface: str, o1: str, o2: str) -> str:
     ``resolve_dispute(answer, types, other_types)``."""
     return (f"{DISPUTE_Q}\nParagraph: {text} \nEntity Phrase: {surface},"
             f" Options: ({o1}), ({o2}) \nAnswer:")
-
-
-def type_verify_prompt(text: Column, surface: Column) -> Column:
-    """C7: second-pass type-verification prompt over the mention table
-    (`algorithms.py:371-379,458-466`)."""
-    return F.concat(
-        F.lit(TYPE_Q + "\nParagraph: "), text,
-        F.lit(" \nEntity Phrase: "), surface, F.lit(" \nAnswer:"),
-    )
-
-
-def dispute_prompt(text: Column, surface: Column, o1: Column, o2: Column) -> Column:
-    """C8: dispute-resolution prompt when two type opinions differ
-    (`algorithms.py:387-395,468-476`)."""
-    return F.concat(
-        F.lit(DISPUTE_Q + "\nParagraph: "), text,
-        F.lit(" \nEntity Phrase: "), surface,
-        F.lit(", Options: ("), o1, F.lit("), ("), o2, F.lit(") \nAnswer:"),
-    )
 
 
 CHATBOT_INIT = "You are an entity recognition system. "

@@ -137,23 +137,18 @@ def curate_flags(
                     F.col("is_keeper") & F.col("is_dropped").isNull())
         .drop("is_dropped")
     )
-    # Both internal boundaries are localCheckpoints (ContextCleaner-
-    # reclaimed when the query's frames drop), so there is no cache
-    # handle for callers to release — the r5 protocol of unpersisting
-    # the RETURNED frame was a silent no-op anyway (cache entries are
-    # keyed on the exact plan, and `out` is a join over the boundary,
-    # not the boundary; the flagged cache leaked across queries — r6
-    # audit: CacheManager "already cached" warnings in the bench
-    # session).
-    out._promptner_caches = ()
+    # Both internal boundaries are localCheckpoints, reclaimed by the
+    # ContextCleaner when the query's frames drop: there is no cache
+    # for callers to release (unpersisting the returned frame would be
+    # a no-op — cache entries are keyed on the exact plan, and `out` is
+    # a join over the boundary, not the boundary).
     return out
 
 
 def stats_from_flags(f: DataFrame) -> DataFrame:
     """The retention aggregate over an existing flags frame —
-    callers that manage the flags cache themselves (the q_curate
-    registry entry registers it with the module's deferred-release
-    protocol) aggregate through this."""
+    callers that already hold the flags (the q_curate registry entry)
+    aggregate through this."""
     one_if = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("long")  # noqa: E731
     return f.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -178,9 +173,7 @@ def curate_stats(
     crawl snapshot to training: (lang, n_docs, n_quality, n_exact,
     n_kept, chars_kept). One |langs|-cardinality aggregate over the
     flags frame; every count is an exact integer (value-hashable
-    cross-engine). NB: the flags frame is left persisted (see
-    curate_flags) — long-lived sessions should go through
-    curate_flags + stats_from_flags and unpersist when done."""
+    cross-engine)."""
     return stats_from_flags(curate_flags(
         docs, quality_min, min_jaccard, n_hashes, band_size, shingle_k))
 

@@ -23,7 +23,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.hashing import hamming64, jaccard, token_shingles
+from ..functions.hashing import hamming64, jaccard
 
 
 def scan_splits_of(*paths: str) -> int:
@@ -301,22 +301,4 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
                 hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"))
         .dropDuplicates(["id_a", "id_b"])
         .where(F.col("hamming") <= max_hamming)
-    )
-
-
-def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame,
-                        shingle_k: int = 3) -> DataFrame:
-    """Exact n-gram Jaccard for an explicit candidate pair table
-    (id_a, id_b) — the verify primitive, reusable by any blocker."""
-    d = docs.select(F.col("doc_id"), F.col("text"))
-    return (
-        pairs
-        .join(d.withColumnRenamed("doc_id", "id_a")
-               .withColumnRenamed("text", "text_a"), "id_a")
-        .join(d.withColumnRenamed("doc_id", "id_b")
-               .withColumnRenamed("text", "text_b"), "id_b")
-        .select("id_a", "id_b",
-                jaccard(token_shingles(F.col("text_a"), shingle_k),
-                        token_shingles(F.col("text_b"), shingle_k))
-                .alias("jaccard"))
     )

@@ -52,22 +52,6 @@ def span_prf(pred_spans: DataFrame, gold_spans: DataFrame,
     )
 
 
-def triple_prf(pred: DataFrame, gold: DataFrame) -> dict:
-    """Set precision/recall of (subj, pred, obj, url, sent_id) triples
-    vs a reference emission — the north_rule's P/R ≥ 0.95 gate.
-    Driver-side scalars (small aggregate)."""
-    key = ["subj", "pred", "obj", "url", "sent_id"]
-    p = pred.select(*key).distinct()
-    g = gold.select(*key).distinct()
-    n_p, n_g = p.count(), g.count()
-    n_tp = p.join(g, key, "left_semi").count()
-    precision = n_tp / n_p if n_p else 1.0
-    recall = n_tp / n_g if n_g else 1.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    return {"tp": n_tp, "n_pred": n_p, "n_gold": n_g,
-            "precision": precision, "recall": recall, "f1": f1}
-
-
 def sample_all_types(sentences: DataFrame, k: int = 3,
                      seed: int = 0, max_tries: int = 100) -> DataFrame:
     """E1 (`data.py:352-375`): rejection-sample a k-row subset whose

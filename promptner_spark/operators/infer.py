@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import schema
 from ..functions.prompts import (
-    PromptSpec, chat_message_prefix, chat_user_turn, completion_prompt,
+    PromptSpec, chat_message_prefix, chat_user_turn,
 )
 from .model import Backend, default_backend_factory, is_chat_backend
 
@@ -47,53 +47,6 @@ def _make_generate(backend: Backend, spec: PromptSpec):
             [chat_prefix + [chat_user_turn(t)] for t in texts])
     return lambda texts: backend.generate(
         [prefix + t + suffix for t in texts])
-
-
-def run_inference(
-    sentences: DataFrame,
-    spec: PromptSpec | None = None,
-    backend_factory: Callable[[], Backend] | None = None,
-    partitions: int | None = None,
-) -> DataFrame:
-    """sentences(url, sent_id, text) → + raw_output (schema.INFERRED).
-
-    The prompt is assembled JVM-side (C2, constant-folded prefix); only
-    the model call crosses into Python, via Arrow.
-    """
-    spec = spec or PromptSpec()
-    backend_factory = backend_factory or default_backend_factory
-
-    df = sentences.select(
-        "url", "sent_id", "text",
-        completion_prompt(spec, F.col("text")).alias("prompt"),
-    )
-    # Always spread the expensive UDF stage across the cluster: a small
-    # upstream file count (or a coalesced scan) must never serialize
-    # inference. Explicit url-hash repartition per north_rule.
-    if partitions is None:
-        partitions = sentences.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(partitions, F.hash(F.col("url")))
-
-    chat_prefix = chat_message_prefix(spec)
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = backend_factory()  # once per task
-        chat = is_chat_backend(backend)
-        for pdf in batches:
-            pdf = pdf.sort_values(["url", "sent_id"], kind="mergesort")
-            if chat:   # C3: constant message prefix + per-row user turn
-                raw = backend.generate_chat(
-                    [chat_prefix + [chat_user_turn(t)] for t in pdf["text"]])
-            else:      # C2: the JVM-rendered completion prompt column
-                raw = backend.generate(pdf["prompt"].tolist())
-            yield pd.DataFrame({
-                "url": pdf["url"].values,
-                "sent_id": pdf["sent_id"].values,
-                "text": pdf["text"].values,
-                "raw_output": raw,
-            })
-
-    return df.mapInPandas(infer, schema=schema.INFERRED)
 
 
 def extract_mentions(
@@ -125,8 +78,7 @@ def extract_mentions(
     backend_factory = backend_factory or default_backend_factory
     carry = tuple(carry)
 
-    # Unlike run_inference, the prompt column is NOT materialized
-    # JVM-side: the prefix/suffix are constants, so rendering them
+    # The prompt column is NOT materialized JVM-side: the prefix/suffix are constants, so rendering them
     # per-row would multiply the shuffle and Arrow IPC volume by the
     # template size for no benefit. Only (url, sent_id, text) and the
     # carried columns cross the exchange and the Arrow boundary; the
@@ -159,6 +111,9 @@ def extract_mentions(
             for url, sent_id, text, raw, *extra_vals in zip(
                     pdf["url"], pdf["sent_id"], pdf["text"], raws, *carried):
                 tags = predict_tags(text, raw)
+                # mention_id: the ordinal by begin offset within the
+                # sentence — deterministic, and the reference's
+                # answer-order semantics for first-wins dedup (E4)
                 for mid, m in enumerate(
                         tags_to_mentions(text.lower().split(" "), tags)):
                     rows.append((url, int(sent_id), mid, m["surface"],

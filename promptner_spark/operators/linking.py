@@ -189,15 +189,6 @@ def fuzzy_surface_pairs(
             .where(F.col("jaccard") >= min_jaccard))
 
 
-def release_caches(df: DataFrame) -> None:
-    """Unpersist every cache a linking builder attached to ``df``
-    (see :func:`build_resolution`). Call when the result has been
-    fully consumed — repeated builder invocations in one session
-    (bench loops, notebooks) otherwise accumulate cached relations."""
-    for cached in getattr(df, "_promptner_caches", ()):
-        cached.unpersist()
-
-
 def _enrich_resolution(out: DataFrame) -> DataFrame:
     """Vocabulary-side canonicalization: every per-surface derivation
     the KG stages need — canonical ``entity_name``, the stable
@@ -234,10 +225,9 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     entity_name, entity_key, eid) — the last three precomputed
     vocabulary-side by :func:`_enrich_resolution`.
 
-    Both internal boundaries are eager localCheckpoints (reclaimed by
-    the ContextCleaner when the query's frames drop), so
-    ``_promptner_caches`` on the returned DataFrame is empty — kept
-    for caller-protocol compatibility (:func:`release_caches`).
+    Both internal boundaries are eager localCheckpoints, reclaimed by
+    the ContextCleaner when the query's frames drop; callers have
+    nothing to release.
     """
     # Materialized eagerly (one vocabulary-sized job): (a) the
     # vocabulary is read by the exact/NIL and the fuzzy branches — one
@@ -259,9 +249,7 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     exact = vocab.join(F.broadcast(aliases),
                        vocab["m_norm"] == aliases["alias_norm"], "left")
     if not fuzzy:
-        exact = _enrich_resolution(exact)
-        exact._promptner_caches = ()  # type: ignore[attr-defined]
-        return exact
+        return _enrich_resolution(exact)
     # One min per surface over the pick key (rank, -jaccard, entity_id,
     # canonical_name, alias_norm) resolves the whole dictionary: the
     # exact hit (rank 0), else the best verified alias over EVERY alias
@@ -296,9 +284,7 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     # dictionary is vocabulary-sized, so defaultParallelism partitions
     # is the right ceiling at any scale.
     out = out.coalesce(out.sparkSession.sparkContext.defaultParallelism)
-    out = out.localCheckpoint(eager=True)
-    out._promptner_caches = ()  # type: ignore[attr-defined]
-    return out
+    return out.localCheckpoint(eager=True)
 
 
 def link_mentions(mentions: DataFrame, aliases: DataFrame,
@@ -346,9 +332,7 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame,
             F.broadcast(resolution),
             F.col("m_norm_key") == resolution["m_norm"], "left",
         ).drop("m_norm_key", "m_norm")
-    out._promptner_caches = getattr(  # type: ignore[attr-defined]
-        resolution, "_promptner_caches", ())
-    # The (persisted, vocab-sized) dictionary handle: emit_triples
+    # The (checkpointed, vocab-sized) dictionary handle: emit_triples
     # derives its eid→name broadcast from it without a corpus pass.
     out._promptner_resolution = resolution  # type: ignore[attr-defined]
     return out

@@ -1,17 +1,21 @@
 """Answer parsing + span alignment + mention materialization
 (operators A1-A4, P1, SP1-SP2, E4 — SURVEY.md §2.5-2.6).
 
-One scalar pandas UDF runs the vendored oracle chain per row:
+:func:`predict_tags` runs the vendored oracle chain for one row:
 ``parse_exemplar_answers`` (`utils.py:107-153` semantics) →
 ``clean_answers`` typed mode (`algorithms.py:37-63`) → ``align_spans``
-(`algorithms.py:72-131`). Per-row PURE — output cannot depend on
+(`algorithms.py:72-131`). The fused extractor
+(operators/infer.py::extract_mentions) calls it per row inside its
+``mapInPandas`` pass. Per-row PURE — output cannot depend on
 partitioning or batch composition, which is what makes the pipeline
 deterministic across cluster sizes (north_rule) and lets the golden
 replay tests assert byte-identical tags.
 
 Mentions are then exploded from the tag sequence into the keyed
-mention table (fixing the reference's surface-keyed dict collision,
-`data.py:38`).
+mention table (oracle/spans.py::tags_to_mentions, fixing the
+reference's surface-keyed dict collision, `data.py:38`);
+``_mentions_udf`` is the same explode as a pandas UDF over gold tags
+(plans/evaluate_gold.py).
 """
 
 from __future__ import annotations
@@ -30,7 +34,8 @@ _FAIL = RetryingBackend.FAIL_PREFIX
 
 def predict_tags(text: str, raw_output: str) -> list[str]:
     """The full parse→clean→align chain for one row (driver-callable
-    for tests; UDF body below). Failure sentinels → all-O tags."""
+    for tests; the fused extractor's per-row body). Failure sentinels
+    → all-O tags."""
     tokens = text.split(" ")
     if raw_output.startswith(_FAIL):
         return ["O"] * len(tokens)
@@ -43,11 +48,6 @@ def predict_tags(text: str, raw_output: str) -> list[str]:
         # reference swallows per-row failures (`run.py:43-44`); we map
         # them to all-O so the row is visible downstream, not dropped
         return ["O"] * len(tokens)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _predict_tags_udf(text: pd.Series, raw: pd.Series) -> pd.Series:
-    return pd.Series([predict_tags(t, r) for t, r in zip(text, raw)])
 
 
 _MENTION_ARR = T.ArrayType(T.StructType([
@@ -64,40 +64,6 @@ def _mentions_udf(text: pd.Series, tags: pd.Series) -> pd.Series:
         tags_to_mentions(t.lower().split(" "), list(tg))
         for t, tg in zip(text, tags)
     ])
-
-
-def parse_and_align(inferred: DataFrame) -> DataFrame:
-    """schema.INFERRED → schema.ALIGNED (adds ``pred`` tag array)."""
-    return inferred.select(
-        "url", "sent_id", "text",
-        _predict_tags_udf(F.col("text"), F.col("raw_output")).alias("pred"),
-        "raw_output",
-    )
-
-
-def explode_mentions(aligned: DataFrame, keep_raw: bool = False) -> DataFrame:
-    """schema.ALIGNED → mention table (schema.MENTIONS).
-
-    ``mention_id`` is the ordinal by begin offset within the sentence —
-    deterministic, reproduces the reference's answer-order semantics
-    for downstream first-wins dedup (E4).
-    """
-    m = aligned.select(
-        "url", "sent_id",
-        F.posexplode(
-            _mentions_udf(F.col("text"), F.col("pred"))
-        ).alias("mention_id", "m"),
-        *(["raw_output"] if keep_raw else []),
-    )
-    return m.select(
-        "url", "sent_id", "mention_id",
-        F.col("m.surface").alias("surface"),
-        F.col("m.begin").alias("begin"),
-        F.col("m.end").alias("end"),
-        F.col("m.type").alias("type"),
-        (F.col("raw_output") if keep_raw else F.lit(None).cast("string")
-         ).alias("raw_output"),
-    )
 
 
 def split_phrases(mentions: DataFrame) -> DataFrame:

@@ -33,7 +33,7 @@ both boundaries to parquet via plans/checkpoint.py.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -48,23 +48,16 @@ from .shard import shard_pack
 @dataclass
 class PrepResult:
     """Handles to the funnel's outputs. ``kept`` is the surviving
-    cleaned corpus (doc_id, lang, text — persisted); ``packed``
+    cleaned corpus (doc_id, lang, text — checkpointed); ``packed``
     assigns every surviving doc to a training shard (doc_id, lang,
     n_tok, shard_id); ``manifest`` is the per-shard summary a write
-    job sizes files with. Call :meth:`unpersist` when done — or
-    :func:`write_training_shards` to materialize and release."""
+    job sizes files with (:func:`write_training_shards` writes both).
+    Every internal boundary is a localCheckpoint, reclaimed by the
+    ContextCleaner when the frames drop — nothing to release."""
 
     kept: DataFrame
     packed: DataFrame
     manifest: DataFrame
-    _caches: list[DataFrame] = field(default_factory=list)
-
-    def unpersist(self) -> None:
-        for df in self._caches:
-            try:
-                df.unpersist()
-            except Exception:
-                pass   # session already stopped
 
 
 def prepare_training_data(
@@ -137,14 +130,10 @@ def prepare_training_data(
     # tests, an equi-join on the store's bucket key at corpus scale.
     packed = packed0.withColumnRenamed("id", "doc_id") \
         .join(kept.select("doc_id", "lang"), "doc_id")
-    # kept is a localCheckpoint (ContextCleaner-reclaimed), so only
-    # the curate flags cache needs managed release.
-    return PrepResult(kept=kept, packed=packed, manifest=manifest,
-                      _caches=[*getattr(flags, "_promptner_caches", ())])
+    return PrepResult(kept=kept, packed=packed, manifest=manifest)
 
 
-def write_training_shards(res: PrepResult, path: str,
-                          release: bool = True) -> None:
+def write_training_shards(res: PrepResult, path: str) -> None:
     """Materialize the funnel: one parquet dataset of the kept text
     partitioned by shard_id (each shard = ~budget tokens = one
     training file group) plus the manifest beside it. The shard
@@ -158,8 +147,6 @@ def write_training_shards(res: PrepResult, path: str,
          .write.mode("overwrite").partitionBy("shard_id")
          .parquet(f"{path}/shards"))
     res.manifest.write.mode("overwrite").parquet(f"{path}/manifest")
-    if release:
-        res.unpersist()
 
 
 __all__ = ["PrepResult", "prepare_training_data",

@@ -93,11 +93,6 @@ def parse_iob2_lines(lines: Iterable[str]) -> list[dict]:
     return out
 
 
-def parse_iob2_file(path: str) -> list[dict]:
-    with open(path) as fh:
-        return parse_iob2_lines(fh.readlines())
-
-
 def render_iob2_lines(
     text: str,
     exact_types: list[str],

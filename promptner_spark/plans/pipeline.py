@@ -1,35 +1,44 @@
-"""The end-to-end KG-construction plan (north_star dataflow):
+"""The end-to-end KG-construction plan (north_star dataflow), defined
+once as named stages:
 
-    pages (url, warc_ts, html, text, lang)
-      → extract text (byte-identical invariant)
-      → sentence chunks
-      → batched prompt inference (deterministic backend)
-      → parse + span-align (reference semantics)
-      → mention table
-      → [optional] type verification (SP3)
-      → entity linking (broadcast alias join + LSH fuzzy)
-      → canonicalization (alias ids + NIL surface components)
-      → nodes / triples tables (+ counts)
+    pages          (url, warc_ts, html, text, lang) — extracted text
+                   (byte-identical invariant)
+    sentences      sentence chunks
+    mentions       fused inference → parse → span-align → explode
+                   (one mapInPandas pass, operators/infer.py)
+                   [optional] type verification (SP3)
+    aliases        the alias table
+    linked         entity linking (broadcast alias join + LSH fuzzy)
+                   → canonicalization (alias ids + NIL surface components)
+    nodes
+    triples        co-occurrence triples
+    triple_counts
 
-Stage boundaries are checkpointable (plans/checkpoint.py) so a crashed
-run resumes; ``run_pipeline(checkpoint_root=...)`` gives the resumable
-variant, ``build_*`` functions give the pure-DAG variant used by tests
-and the driver entry.
+Only the **boundary policy** varies between callers; both policies
+are built on plans/checkpoint.py:
+
+- in memory (``build_pipeline``, ``streaming.incremental.
+  batch_triple_counts``): every stage is lazy except ``mentions``,
+  which is url-hash repartitioned and materialized by
+  :func:`checkpoint.materialize`;
+- parquet (``run_pipeline``): every stage is a resumable
+  :func:`checkpoint.run_stage`, the big tables bucketed by url or
+  subject hash, so a crashed run resumes at the first incomplete stage.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import linking, triples as triples_op
-from ..operators.infer import extract_mentions, run_inference
-from ..operators.parse import explode_mentions, parse_and_align
+from ..operators.infer import extract_mentions
 from ..operators.verify import verify_types
 from ..sources.pages import pages_with_extracted_text
 from ..sources.sentences import split_sentences
-from .checkpoint import run_stage
+from .checkpoint import materialize, run_stage
 
 
 @dataclass
@@ -41,15 +50,153 @@ class PipelineResult:
     nodes: DataFrame
     triples: DataFrame
     triple_counts: DataFrame
-    cached: tuple = ()   # every DataFrame this build persisted
+    cached: tuple = ()   # release handles of the in-memory boundaries
 
     def unpersist(self) -> None:
-        """Release every cache the build created (the persisted mention
-        table — kept even when ``with_verify`` re-derives ``mentions``
-        from it — and the linking vocabulary). Loop callers (bench,
-        notebooks) must call this or cached relations accumulate."""
-        for df in self.cached:
-            df.unpersist()
+        """Release the blocks the build materialized (the mention
+        boundary — kept even when ``with_verify`` re-derives
+        ``mentions`` from it). Loop callers (bench, notebooks) must
+        call this or checkpoint blocks accumulate."""
+        for handle in self.cached:
+            handle.unpersist()
+
+
+# stage(name, build, bucket_on=None) -> DataFrame: the boundary policy.
+# ``build`` returns the stage's lazy frame; ``bucket_on`` names the
+# hash key of a big table's layout.
+Stage = Callable[..., DataFrame]
+
+
+class _InMemory:
+    """In-memory boundary policy: one materialization, at the mention
+    stage, hash-partitioned on its ``bucket_on`` key (url). The
+    inference UDF output feeds several branches (linking's vocabulary
+    and stream join, nodes/triples/counts, the emit dictionary), so
+    without the boundary the UDF would re-run per branch. Every other
+    stage stays lazy: since emit_triples became a
+    single groupBy pass, each output reads the canonical frame exactly
+    once, and recomputing it from the materialized mentions is one
+    broadcast join — cheaper than a second 10^7-row boundary (measured
+    ~10% pipeline win).
+
+    Repartitioned by url BEFORE the boundary: the Python stage erases
+    partitioning metadata (MapInPandas output is UnknownPartitioning —
+    the UDF could emit anything), so without this the KG pair emission
+    pays a corpus-wide (url, sent_id) exchange. HashPartitioning(url)
+    on the materialized relation (kept through the checkpoint by
+    ``keep_partitioning``) satisfies the groupBy(url, sent_id)
+    clustering (subset rule), so the whole KG stage — final
+    collect_set, pair Generate, name reattach — runs exchange-free off
+    the boundary. The one mention-stream exchange this adds happens
+    inside the embarrassingly-parallel build phase, where it scales; it
+    mirrors the parquet policy's url-hash bucketed layout. url is a
+    page key — per-key volume is one page's mentions, so no skew."""
+
+    def __init__(self, spark: SparkSession, partitions: int | None = None):
+        self.n_parts = (partitions if partitions is not None
+                        else spark.sparkContext.defaultParallelism)
+        self.handles: list = []
+
+    def __call__(self, name: str, build: Callable[[], DataFrame],
+                 bucket_on: str | None = None) -> DataFrame:
+        if name != "mentions":
+            return build()
+        df, handle = materialize(
+            build().repartition(self.n_parts, bucket_on),
+            keep_partitioning=True)
+        self.handles.append(handle)
+        return df
+
+
+def _parquet(spark: SparkSession, root: str, n_buckets: int) -> Stage:
+    """Parquet boundary policy: every stage is a resumable
+    ``run_stage``; a stage with ``bucket_on`` is written partitioned by
+    ``bucket = pmod(xxhash64(bucket_on), n_buckets)`` (the north_star's
+    "partitioned Iceberg graph tables" discipline, parquet stand-in —
+    see plans/checkpoint.py)."""
+    def stage(name: str, build: Callable[[], DataFrame],
+              bucket_on: str | None = None) -> DataFrame:
+        if bucket_on is None:
+            return run_stage(spark, root, name, build)
+        bucket = F.pmod(F.xxhash64(bucket_on), F.lit(n_buckets)).cast("int")
+        return run_stage(spark, root, name,
+                         lambda: build().withColumn("bucket", bucket),
+                         partition_cols=["bucket"])
+    return stage
+
+
+def _chain(
+    spark: SparkSession,
+    pages_source: Callable[[], DataFrame],
+    stage: Stage,
+    partitions: int | None = None,
+    with_verify: bool = False,
+    resolve_disputes: bool = False,
+    fuzzy_link: bool = True,
+    spec=None,
+    nil_merge: bool = False,
+    vocab_scale: int = 1,
+    backend_factory=None,
+    portable_fuzzy: bool = False,
+) -> PipelineResult:
+    """The flagship stage graph, wired once; ``stage`` is the boundary
+    policy (:class:`_InMemory` or :func:`_parquet`)."""
+    pages = stage("pages", pages_source)
+    sentences = stage("sentences", lambda: split_sentences(pages))
+    # backend_factory: () -> operators.model.Backend, constructed once
+    # per executor task (the real-model injection point — see
+    # tools/real_backend_smoke.py). None = the deterministic default.
+    if backend_factory is None and vocab_scale > 1:
+        from ..operators.gazetteer import scaled_gazetteer
+        from ..operators.model import GazetteerBackend, RetryingBackend
+        gaz = scaled_gazetteer(vocab_scale)
+
+        def backend_factory():
+            return RetryingBackend(GazetteerBackend(gaz))
+    # with_verify carries the sentence text on the mention rows so the
+    # verification stage is a second mapInPandas with NO join — the
+    # text column exists only between the two UDF stages and is
+    # dropped before linking.
+    base_mentions = stage("mentions", lambda: extract_mentions(
+        sentences, spec=spec, partitions=partitions,
+        backend_factory=backend_factory,
+        carry=("text",) if with_verify else ()), bucket_on="url")
+    mentions = base_mentions
+    if with_verify:
+        mentions = verify_types(
+            base_mentions, resolve_disputes=resolve_disputes,
+        ).withColumn("type", F.col("type_final")).drop(
+            "type_verified", "type_final", "text")
+    # aliases materialized alongside nodes/edges under the parquet
+    # policy (north_star graph tables: nodes, edges, aliases)
+    aliases = stage("aliases",
+                    lambda: linking.alias_df(spark, vocab_scale=vocab_scale))
+    # portable_fuzzy: md5-family LSH bands in the fuzzy fallback so a
+    # DuckDB oracle can replay the banding exactly (q_pipeline_triples'
+    # value-exact check); an O(vocab) config knob, default off.
+    linked = stage("linked", lambda: linking.link_mentions(
+        mentions, aliases, fuzzy=fuzzy_link, portable_fuzzy=portable_fuzzy),
+        bucket_on="url")
+    canonical = triples_op.canonicalize(linked, nil_merge=nil_merge)
+    nodes = stage("nodes", lambda: triples_op.nodes_table(canonical))
+    # eid→name dictionary for the narrow-shuffle pair emission: a
+    # vocabulary-sized distinct over the (materialized) resolution
+    # dictionary — no corpus pass. Only a lazy ``linked`` still holds
+    # it; a stage read back from parquet runs the string plan. nil_merge
+    # rewrites names, so the precomputed eids are stale there and the
+    # string plan runs too.
+    resolution = getattr(linked, "_promptner_resolution", None)
+    name_dict = (resolution.select("eid", "entity_name").distinct()
+                 if resolution is not None and not nil_merge else None)
+    # triples bucket on the SUBJECT hash — downstream per-entity reads
+    # (edge listing, degree counts) prune to one bucket instead of
+    # scanning the corpus-wide edge table.
+    trips = stage("triples", lambda: triples_op.emit_triples(
+        canonical, name_dict=name_dict), bucket_on="subj")
+    counts = stage("triple_counts", lambda: triples_op.triple_counts(trips))
+    return PipelineResult(pages, sentences, mentions, linked, nodes,
+                          trips, counts,
+                          cached=tuple(getattr(stage, "handles", ())))
 
 
 def build_pipeline(
@@ -62,28 +209,19 @@ def build_pipeline(
     replicate: int = 1,
     spec=None,
     nil_merge: bool = False,
-    eager_cache: bool = True,
     vocab_scale: int = 1,
     backend_factory=None,
     portable_fuzzy: bool = False,
 ) -> PipelineResult:
-    """Build the pipeline DAG. ``resolve_disputes`` (with
+    """The pipeline DAG with the in-memory boundary (one materialized
+    mention stage, everything else lazy). ``resolve_disputes`` (with
     ``with_verify``) enables the C8 third-query resolution in the
     fused verification pass; ``nil_merge`` additionally merges
     near-duplicate NIL surfaces by connected components before
     canonicalization (operators/triples.py::nil_components).
 
-    ``eager_cache`` (default) fills the persisted mention cache with
-    one count() job at build time. This is load-bearing, not a
-    convenience: the cache feeds SEVERAL downstream plan branches
-    (linking hit+miss, nodes/triples/counts, the emit self-aggregate),
-    and Spark schedules those branches as independent concurrent
-    stages — a LAZY cache lets each concurrent stage recompute the
-    whole inference-UDF chain before any of them has filled it
-    (duplicate Python-worker work + 2-3× worker oversubscription;
-    measured on this box: the same query oscillates 7 s ↔ 69 s
-    depending on which stage wins the race). Pass ``False`` only for
-    pure-DAG inspection (plan tests, .explain).
+    The mention stage is filled by one eager job at build time; call
+    :meth:`PipelineResult.unpersist` once the outputs are consumed.
 
     ``vocab_scale > 1`` runs the bench's vocabulary-scaled variant:
     replica texts are token-perturbed and the gazetteer/aliases grow
@@ -91,121 +229,16 @@ def build_pipeline(
     operators/gazetteer.py::scaled_*) so the vocabulary-level KG
     stages scale with the corpus like a real Zipf corpus instead of
     staying ~20 surfaces under replication."""
-    pages = pages_with_extracted_text(
-        spark, sf_dir, replicate=replicate,
-        perturb_vocab=vocab_scale > 1)
-    sentences = split_sentences(pages)
-    aliases = linking.alias_df(spark, vocab_scale=vocab_scale)
-    # backend_factory: () -> operators.model.Backend, constructed once
-    # per executor task (the real-model injection point — see
-    # tools/real_backend_smoke.py). None = the deterministic default.
-    if backend_factory is None and vocab_scale > 1:
-        from ..operators.gazetteer import scaled_gazetteer
-        from ..operators.model import GazetteerBackend, RetryingBackend
-        gaz = scaled_gazetteer(vocab_scale)
-
-        def backend_factory():
-            return RetryingBackend(GazetteerBackend(gaz))
-    # Fused infer→parse→align→explode: one Arrow crossing (see
-    # operators/infer.py::extract_mentions). Persisted because linking
-    # references mentions on both its hit and miss branches, and
-    # nodes/triples/counts all hang off it — without a materialization
-    # boundary the inference UDF would re-run per branch.
-    # (run_pipeline gets the same boundary from its checkpoint writes;
-    # at 100 TB this IS the materialized mentions table.)
-    # with_verify carries the sentence text on the mention rows so the
-    # verification stage is a second mapInPandas with NO join — the
-    # text column exists only between the two UDF stages and is
-    # dropped before linking.
-    # Post-UDF repartition by url BEFORE caching: the Python stage
-    # erases partitioning metadata (MapInPandas output is
-    # UnknownPartitioning — the UDF could emit anything), so without
-    # this the KG pair emission pays a corpus-wide (url, sent_id)
-    # exchange. HashPartitioning(url) on the cached relation satisfies
-    # the groupBy(url, sent_id) clustering (subset rule), so the whole
-    # KG stage — final collect_set, pair Generate, name reattach,
-    # write — runs exchange-free straight off the cache. The one
-    # mention-stream exchange this adds happens HERE, inside the
-    # embarrassingly-parallel build phase, where it scales; it also
-    # mirrors run_pipeline's url-hash bucketed layout. url is a page
-    # key — per-key volume is one page's mentions, so no skew.
-    n_parts = (partitions if partitions is not None
-               else spark.sparkContext.defaultParallelism)
-    base_mentions = extract_mentions(
-        sentences, spec=spec, partitions=partitions,
-        backend_factory=backend_factory,
-        carry=("text",) if with_verify else ()) \
-        .repartition(n_parts, "url")
-    release: tuple = ()
-    if eager_cache:
-        # r6: eager localCheckpoint instead of persist+count. Same
-        # one-job fill before any branch hangs off the boundary (the
-        # concurrent-stage duplicate-fill race in the docstring), but
-        # every downstream consumer scans raw materialized blocks
-        # (LogicalRDD — which preserves the url-hash partitioning, so
-        # the KG groupBy stays exchange-free) instead of
-        # decompressing InMemoryTableScan columnar batches per scan —
-        # the same slow path the curate/linking boundaries already
-        # left behind (measured there: order-of-magnitude per-row
-        # scan cost). DataFrame.unpersist cannot release checkpoint
-        # blocks, so the handle for the blocks rides in ``cached``.
-        jsc = spark.sparkContext._jsc
-        before = {e.getKey()
-                  for e in jsc.getPersistentRDDs().entrySet().toArray()}
-        # AQE makes the checkpoint capture UnknownPartitioning
-        # (AdaptiveSparkPlanExec is a leaf whose outputPartitioning is
-        # unknown), which would re-introduce a corpus-wide
-        # (url, sent_id) exchange in the KG reduce. The boundary's own
-        # plan is a fixed explicit repartition — AQE has nothing to
-        # adapt there — so disabling it for just this materialization
-        # preserves the url-hash layout in the LogicalRDD.
-        conf = spark.conf
-        aqe_was = conf.get("spark.sql.adaptive.enabled")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            base_mentions = base_mentions.localCheckpoint(eager=True)
-        finally:
-            conf.set("spark.sql.adaptive.enabled", aqe_was)
-        release = tuple(
-            e.getValue() for e in jsc.getPersistentRDDs().entrySet()
-            .toArray() if e.getKey() not in before)
-    else:
-        base_mentions = base_mentions.persist()
-    mentions = base_mentions
-    if with_verify:
-        mentions = verify_types(
-            base_mentions, resolve_disputes=resolve_disputes,
-        ).withColumn("type", F.col("type_final")).drop(
-            "type_verified", "type_final", "text")
-    # portable_fuzzy: md5-family LSH bands in the fuzzy fallback so a
-    # DuckDB oracle can replay the banding exactly (q_pipeline_triples'
-    # value-exact check); an O(vocab) config knob, default off.
-    linked = linking.link_mentions(mentions, aliases, fuzzy=fuzzy_link,
-                                   portable_fuzzy=portable_fuzzy)
-    # ``release`` holds the checkpoint-block JavaRDD handles (their
-    # .unpersist() frees the blocks); on the persist path it is empty
-    # and the persisted frame itself is the handle.
-    cached = ((base_mentions,) if not release else release) + tuple(
-        getattr(linked, "_promptner_caches", ()))
-    # NOT persisted: since emit_triples became a single groupBy pass,
-    # each output (nodes / triples / counts) reads canonical exactly
-    # once, and recomputing it from the cached mentions is one
-    # broadcast join — cheaper than writing a second 10^7-row cache
-    # (measured ~10% pipeline win). Callers materializing several
-    # outputs repeatedly should use run_pipeline, which checkpoints.
-    canonical = triples_op.canonicalize(linked, nil_merge=nil_merge)
-    nodes = triples_op.nodes_table(canonical)
-    # eid→name dictionary for the narrow-shuffle pair emission: a
-    # vocabulary-sized distinct over the (persisted) resolution
-    # dictionary — no corpus pass. nil_merge rewrites names, so the
-    # precomputed eids are stale there and the string plan runs.
-    resolution = getattr(linked, "_promptner_resolution", None)
-    name_dict = (resolution.select("eid", "entity_name").distinct()
-                 if resolution is not None and not nil_merge else None)
-    trips = triples_op.emit_triples(canonical, name_dict=name_dict)
-    counts = triples_op.triple_counts(trips)
-    return PipelineResult(pages, sentences, mentions, linked, nodes,
-                          trips, counts, cached=cached)
+    return _chain(
+        spark,
+        lambda: pages_with_extracted_text(
+            spark, sf_dir, replicate=replicate,
+            perturb_vocab=vocab_scale > 1),
+        _InMemory(spark, partitions),
+        partitions=partitions, with_verify=with_verify,
+        resolve_disputes=resolve_disputes, fuzzy_link=fuzzy_link,
+        spec=spec, nil_merge=nil_merge, vocab_scale=vocab_scale,
+        backend_factory=backend_factory, portable_fuzzy=portable_fuzzy)
 
 
 def run_pipeline(
@@ -221,54 +254,21 @@ def run_pipeline(
 
     Each stage is parquet + per-partition manifest; re-running after a
     crash re-executes only incomplete stages. The big graft tables are
-    written PARTITIONED (the north_star's "partitioned Iceberg graph
-    tables" discipline, parquet stand-in — see plans/checkpoint.py):
+    written PARTITIONED:
 
     - ``mentions`` / ``linked``: ``bucket = pmod(xxhash64(url),
       n_buckets)`` — url-hash bucketing, so a resume, a backfill of
       one bucket, or a per-bucket consumer touches 1/n of the files;
-    - ``triples``: bucketed on the SUBJECT hash — downstream
-      per-entity reads (edge listing, degree counts) prune to one
-      bucket instead of scanning the corpus-wide edge table.
-    Nodes and aliases stay unpartitioned (vocabulary-sized)."""
-    url_bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    # pages_source: alternative corpus reader returning the pages
-    # shape (url, warc_ts, lang, text, ...) — e.g. sources.warc::
-    # pages_from_warc for a crawl directory (the __main__ CLI wires
-    # this); default is the synthetic parquet corpus at sf_dir.
-    pages = run_stage(
-        spark, checkpoint_root, "pages",
-        pages_source if pages_source is not None
-        else (lambda: pages_with_extracted_text(spark, sf_dir)))
-    sentences = run_stage(
-        spark, checkpoint_root, "sentences",
-        lambda: split_sentences(pages))
-    mentions = run_stage(
-        spark, checkpoint_root, "mentions",
-        lambda: extract_mentions(sentences, partitions=partitions)
-        .withColumn("bucket", url_bucket),
-        partition_cols=["bucket"])
-    # aliases materialized alongside nodes/edges (north_star graph
-    # tables: nodes, edges, aliases)
-    aliases = run_stage(
-        spark, checkpoint_root, "aliases",
-        lambda: linking.alias_df(spark))
-    linked = run_stage(
-        spark, checkpoint_root, "linked",
-        lambda: linking.link_mentions(mentions, aliases, fuzzy=fuzzy_link),
-        partition_cols=["bucket"])   # bucket column rides in from mentions
-    canonical = triples_op.canonicalize(linked)
-    nodes = run_stage(
-        spark, checkpoint_root, "nodes",
-        lambda: triples_op.nodes_table(canonical))
-    trips = run_stage(
-        spark, checkpoint_root, "triples",
-        lambda: triples_op.emit_triples(canonical)
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")),
-        partition_cols=["bucket"])
-    counts = run_stage(
-        spark, checkpoint_root, "triple_counts",
-        lambda: triples_op.triple_counts(trips))
-    return PipelineResult(pages, sentences, mentions, linked, nodes,
-                          trips, counts)
+    - ``triples``: bucketed on the SUBJECT hash.
+    Nodes and aliases stay unpartitioned (vocabulary-sized).
+
+    ``pages_source``: alternative corpus reader returning the pages
+    shape (url, warc_ts, lang, text, ...) — e.g. sources.warc::
+    pages_from_warc for a crawl directory (the __main__ CLI wires
+    this); default is the synthetic parquet corpus at sf_dir."""
+    if pages_source is None:
+        def pages_source():
+            return pages_with_extracted_text(spark, sf_dir)
+    return _chain(spark, pages_source,
+                  _parquet(spark, checkpoint_root, n_buckets),
+                  partitions=partitions, fuzzy_link=fuzzy_link)

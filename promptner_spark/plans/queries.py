@@ -25,9 +25,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import textstats as TS
-from ..functions.hashing import (
-    HASH_HEX_DIGITS, duckdb_portable_hash, portable_hash,
-)
+from ..functions.hashing import duckdb_portable_hash, portable_hash
 from ..operators import (
     decontaminate as decon, dedup, lines as lines_op, linking,
     pii as pii_op, sample as smp, similarity, triples as triples_op,
@@ -36,12 +34,11 @@ from ..operators.components import connected_components
 from ..operators.gazetteer import (
     ALIAS_ROWS, DUCKDB_ALIASES_CTE, ORACLE_GAZETTEER, duckdb_gazetteer_cte,
 )
-from ..operators.infer import extract_mentions, run_inference
+from ..operators.infer import extract_mentions
 from ..operators.model import GazetteerBackend, RetryingBackend
-from ..operators.parse import explode_mentions, parse_and_align
 from ..operators.verify import verify_types
 from ..sources.pages import DUCKDB_PAGES_CTE, synthesize_pages
-from ..operators.evaluate import span_prf
+from .checkpoint import materialize
 
 BIG_PRIME = 1_000_000_007
 
@@ -52,7 +49,10 @@ BIG_PRIME = 1_000_000_007
 # DEFERRED: each query registers its caches here, and the next query's
 # entry (the _managed wrapper on every registry function) drains the
 # list. Nothing cached survives past the following query call, so a
-# 35-query session holds at most one query's caches at a time.
+# 35-query session holds at most one query's caches at a time. Safe
+# for checkpoint blocks too (checkpoint.materialize's handle): the
+# driver materializes a query's result BEFORE calling the next query,
+# so released data is never read again.
 _LIVE_CACHES: list[DataFrame] = []
 
 
@@ -69,54 +69,6 @@ def _release_pending() -> None:
 def _defer_release(*dfs: DataFrame) -> None:
     _LIVE_CACHES.extend(dfs)
 
-
-class _CheckpointBlocks:
-    """Deferred-release handle for a localCheckpoint's persisted RDD
-    blocks. ``DataFrame.unpersist`` only talks to the CacheManager and
-    never touches a checkpoint's RDD storage, so without this the
-    blocks of every registry checkpoint would linger until the
-    ContextCleaner's next GC-driven sweep — the round-start tree's
-    cache-hygiene test (tests/test_plan_shapes.py) caught exactly that
-    regression, inherited from the r5-bonus persist→checkpoint switch.
-    Safe under the registry protocol: the driver materializes a
-    query's result BEFORE calling the next query (whose _managed
-    wrapper drains these), so the checkpointed data is never read
-    again after release."""
-
-    def __init__(self, jrdds: list):
-        self._jrdds = jrdds
-
-    def unpersist(self) -> None:
-        for jrdd in self._jrdds:
-            try:
-                jrdd.unpersist()
-            except Exception:
-                pass   # session already stopped
-
-
-def _managed_persist(df: DataFrame) -> DataFrame:
-    """EAGER materialization boundary (r6: localCheckpoint). The eager
-    fill is load-bearing, not warm-up: these boundaries feed several
-    concurrent downstream stages, and a lazy cache lets each stage
-    recompute the whole upstream (inference-UDF) chain before any has
-    filled it — measured 7 s ↔ 69 s oscillation on the pipeline
-    query. The checkpoint (vs the r5 persist+count) additionally makes
-    AQE broadcast-build jobs and every downstream action scan a
-    LogicalRDD instead of resolving the full lineage against the
-    cache manager — the r6 stage audit caught broadcast-side jobs
-    recomputing the inference chain off persisted boundaries (see
-    operators/linking.py). The checkpoint's RDD blocks are registered
-    for deferred release at the next registry call (see
-    :class:`_CheckpointBlocks`)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = {e.getKey() for e in jsc.getPersistentRDDs().entrySet()
-              .toArray()}
-    out = df.localCheckpoint(eager=True)
-    new = [e.getValue() for e in jsc.getPersistentRDDs().entrySet()
-           .toArray() if e.getKey() not in before]
-    if new:
-        _defer_release(_CheckpointBlocks(new))
-    return out
 
 # span-F1 perturbed predictor: two misses (FN) + one type flip (FP+FN)
 PRED_GAZ = {s: ("STRUCT" if s == "window" else t)
@@ -317,10 +269,11 @@ FROM mentions m LEFT JOIN aliases a ON m.surface = a.alias_norm"""
 
 # --------------------------------------------------------------------- G3
 def q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Persisted: canonicalize feeds a self-join (emit_triples) plus the
+    # Materialized: canonicalize feeds a self-join (emit_triples) plus the
     # counts agg — without the boundary the inference/parse UDF chain
     # would re-run once per plan branch.
-    m = _managed_persist(_oracle_mentions(spark, sf_dir))
+    m, blocks = materialize(_oracle_mentions(spark, sf_dir))
+    _defer_release(blocks)
     linked = linking.link_exact(m, linking.alias_df(spark))
     canonical = triples_op.canonicalize(linked)
     counts = triples_op.triple_counts(triples_op.emit_triples(canonical))
@@ -865,10 +818,6 @@ def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
                          min_jaccard=_MIN_J, n_hashes=_MINHASH_N,
                          band_size=_BAND_SIZE, shingle_k=_SHINGLE_K,
                          splits_hint=hint)
-    # release the REAL persisted boundary (curate_flags exposes it via
-    # _promptner_caches; unpersisting the joined return frame was a
-    # silent no-op — r6 cache-leak fix) at the next registry call
-    _defer_release(*getattr(flags, "_promptner_caches", (flags,)))
     return stats_from_flags(flags)
 
 
@@ -1294,8 +1243,6 @@ def q_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_seed=_PREP_SEED, shard_budget=_PREP_BUDGET,
         shard_seed=_PREP_SEED, bucket_bits=_PREP_BITS,
         splits_hint=_splits(sf_dir))
-    for c in res._caches:
-        _defer_release(c)   # unpersisted at the next registry call
     return res.manifest
 
 
@@ -1847,8 +1794,7 @@ def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, not a semantics change — parity with the fast family is
     pinned by tests/test_pipeline_oracle.py)."""
     from .pipeline import build_pipeline
-    res = build_pipeline(spark, sf_dir,   # eager_cache fills up front
-                         portable_fuzzy=True)
+    res = build_pipeline(spark, sf_dir, portable_fuzzy=True)
     _defer_release(*res.cached)
     return res.triple_counts.select(
         "subj", "pred", "obj",
@@ -2189,8 +2135,9 @@ def q_hot_surfaces(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain GROUP BY the oracle runs."""
     from ..operators.skew import hot_surface_counts
     # two agg branches (salted counts + composite-key distinct) read
-    # the mention stream — managed-persisted like every multi-consumer
-    m = _managed_persist(_oracle_mentions(spark, sf_dir))
+    # the mention stream — materialized like every multi-consumer
+    m, blocks = materialize(_oracle_mentions(spark, sf_dir))
+    _defer_release(blocks)
     return hot_surface_counts(m, n_salts=8)
 
 

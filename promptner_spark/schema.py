@@ -45,24 +45,6 @@ MENTIONS = T.StructType([
     T.StructField("raw_output", T.StringType(), True),
 ])
 
-# Inference output: one row per document with the raw "LLM" text kept
-# for lineage (`run.py:13` meta column).
-INFERRED = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("sent_id", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("raw_output", T.StringType(), False),
-])
-
-# Aligned output: reference prediction record (`run.py:13`).
-ALIGNED = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("sent_id", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("pred", T.ArrayType(T.StringType()), False),
-    T.StructField("raw_output", T.StringType(), False),
-])
-
 # -------------------------------------------------------------- graph tables
 ALIASES = T.StructType([
     T.StructField("alias_norm", T.StringType(), False),

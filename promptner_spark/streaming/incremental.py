@@ -80,24 +80,16 @@ _POINTER = "CURRENT"
 
 
 def batch_triple_counts(pages_batch: DataFrame) -> DataFrame:
-    """The batch pipeline tail on one micro-batch of pages."""
-    from ..operators import linking, triples as triples_op
-    from ..sources.sentences import split_sentences
-    from ..operators.infer import extract_mentions
+    """The batch pipeline tail on one micro-batch of pages: the
+    flagship stage graph (plans/pipeline.py) with the in-memory
+    boundary, its counts materialized before the boundary is
+    released."""
+    from ..plans.pipeline import _InMemory, _chain
 
-    spark = pages_batch.sparkSession
-    sentences = split_sentences(pages_batch)
-    # eager fill, same reason as build_pipeline: several concurrent
-    # consumers (vocab distinct + the stream join) must not race the
-    # cache fill and duplicate the UDF chain
-    mentions = extract_mentions(sentences).persist()
-    mentions.count()
-    linked = linking.link_mentions(mentions, linking.alias_df(spark))
-    canonical = triples_op.canonicalize(linked)
-    counts = triples_op.triple_counts(triples_op.emit_triples(canonical))
-    counts = counts.localCheckpoint(eager=True)   # consume before release
-    linking.release_caches(linked)
-    mentions.unpersist()
+    res = _chain(pages_batch.sparkSession, lambda: pages_batch,
+                 _InMemory(pages_batch.sparkSession))
+    counts = res.triple_counts.localCheckpoint(eager=True)
+    res.unpersist()
     return counts
 
 

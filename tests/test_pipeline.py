@@ -1,12 +1,14 @@
 """Pipeline-level invariants (SURVEY.md §5.2 items 3, 6 + resume).
 
 - byte-identical text extraction per url (north_rule invariant);
-- fused extract_mentions ≡ the 3-stage unfused chain (the fusion is a
-  pure physical optimization);
+- fused extract_mentions ≡ the unfused parse → align → explode chain
+  run driver-side (the fusion is a pure physical optimization);
 - triple set independent of partition count (determinism across
   parallelism levels);
 - run_pipeline resumes from checkpoint without recomputing completed
-  stages.
+  stages;
+- build_pipeline, run_pipeline and batch_triple_counts (one stage
+  graph, two boundary policies) give identical triple counts.
 """
 
 from __future__ import annotations
@@ -30,18 +32,34 @@ def test_extraction_byte_identical(spark, sf_dir):
 
 
 def test_fused_equals_unfused(spark, sf_dir):
-    from promptner_spark.operators.infer import extract_mentions, run_inference
-    from promptner_spark.operators.parse import explode_mentions, parse_and_align
+    """The fused mapInPandas extractor equals the unfused chain run
+    driver-side: the default backend's answers for the collected
+    sentences → parse.predict_tags → oracle.spans.tags_to_mentions."""
+    from promptner_spark.functions.prompts import PromptSpec
+    from promptner_spark.operators.infer import _make_generate, extract_mentions
+    from promptner_spark.operators.model import default_backend_factory
+    from promptner_spark.operators.parse import predict_tags
+    from promptner_spark.oracle.spans import tags_to_mentions
     from promptner_spark.sources.pages import pages_with_extracted_text
     from promptner_spark.sources.sentences import split_sentences
 
     sentences = split_sentences(pages_with_extracted_text(spark, sf_dir))
     fused = extract_mentions(sentences, partitions=3)
-    unfused = explode_mentions(parse_and_align(
-        run_inference(sentences, partitions=5)))
+    sents = sentences.select("url", "sent_id", "text").collect()
+    generate = _make_generate(default_backend_factory(), PromptSpec())
+    raws = generate([r["text"] for r in sents])
+    unfused = sorted(
+        (r["url"], r["sent_id"], mid, m["surface"], m["begin"], m["end"],
+         m["type"])
+        for r, raw in zip(sents, raws)
+        for mid, m in enumerate(tags_to_mentions(
+            r["text"].lower().split(" "), predict_tags(r["text"], raw))))
     cols = ["url", "sent_id", "mention_id", "surface", "begin", "end", "type"]
-    assert _rows(fused, cols) == _rows(unfused, cols)
-    assert len(_rows(fused, cols)) > 0
+    got = _rows(fused, cols)
+    assert got == unfused
+    assert len(got) > 0
+    for i, c in enumerate(cols):   # no column is empty on every row
+        assert any(row[i] not in (None, "") for row in got), c
 
 
 def test_triples_partition_invariant(spark, sf_dir):
@@ -78,7 +96,6 @@ def test_emit_triples_keyed_equals_string_plan(spark, sf_dir):
     cols = ["subj", "pred", "obj", "url", "sent_id"]
     rk, rp = _rows(keyed, cols), _rows(plain, cols)
     mentions.unpersist()
-    linking.release_caches(linked)
     assert rk == rp
     assert len(rk) > 0
 
@@ -107,6 +124,28 @@ def test_run_pipeline_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     # completed stage was NOT recomputed (marker untouched)
     assert os.path.getmtime(os.path.join(
         root, "mentions", "_SUCCESS_STAGE")) == mentions_marker_mtime
+
+
+def test_three_wirings_give_identical_triple_counts(spark, sf_dir, tmp_path):
+    """The flagship stage graph under each boundary policy: the
+    in-memory build, the resumable parquet run and the streaming
+    upkeep's per-batch tail return the same triple counts."""
+    from promptner_spark.plans.pipeline import build_pipeline, run_pipeline
+    from promptner_spark.sources.pages import pages_with_extracted_text
+    from promptner_spark.streaming.incremental import batch_triple_counts
+
+    cols = ["subj", "pred", "obj", "n_sents", "n_docs"]
+    built = build_pipeline(spark, sf_dir)
+    in_memory = _rows(built.triple_counts, cols)
+    built.unpersist()
+    parquet = _rows(run_pipeline(
+        spark, sf_dir, checkpoint_root=str(tmp_path / "ckpt")).triple_counts,
+        cols)
+    batch = _rows(batch_triple_counts(
+        pages_with_extracted_text(spark, sf_dir)), cols)
+    assert in_memory == parquet
+    assert in_memory == batch
+    assert len(in_memory) == 77   # sf0.001
 
 
 def test_manifest_records_partition_metrics(spark, sf_dir, tmp_path):
@@ -173,7 +212,6 @@ def test_link_mentions_salted_fallback_equals_broadcast(spark, sf_dir):
                                    max_broadcast_vocab=0, salt=4)
     rb, rs = _rows(bcast, cols), _rows(salted, cols)
     mentions.unpersist()
-    linking.release_caches(bcast), linking.release_caches(salted)
     assert rb == rs and len(rb) > 0
 
 

@@ -100,9 +100,8 @@ def test_portable_fuzzy_band_family_parity_on_sf(spark, sf_dir):
     measures on the driver corpus."""
     from promptner_spark.plans.pipeline import build_pipeline
 
-    fast = build_pipeline(spark, sf_dir, eager_cache=False)
-    port = build_pipeline(spark, sf_dir, eager_cache=False,
-                          portable_fuzzy=True)
+    fast = build_pipeline(spark, sf_dir)
+    port = build_pipeline(spark, sf_dir, portable_fuzzy=True)
     cols = ["subj", "pred", "obj", "n_sents", "n_docs"]
     a = sorted(map(tuple, fast.triple_counts.select(*cols)
                    .toPandas().itertuples(index=False)))

@@ -34,14 +34,12 @@ def test_tokens_conserved_and_each_doc_packed_once(spark, sf_dir):
     assert sum(m["n_docs"] for m in manifest) == len(expect)
     # lang survives the funnel for the write job's partitioning
     assert {r["lang"] for r in packed} <= {"en", "de", "fr", "es", "zh"}
-    res.unpersist()
 
 
 def test_bench_hit_is_removed(spark, sf_dir):
     docs = _corpus(spark, sf_dir)
     base = prepare_training_data(docs, shard_budget=200, bucket_bits=2)
     survivors = {r["doc_id"] for r in base.packed.collect()}
-    base.unpersist()
     victim = sorted(survivors)[0]
     victim_text = docs.where(F.col("doc_id") == victim) \
         .collect()[0]["text"]
@@ -52,7 +50,6 @@ def test_bench_hit_is_removed(spark, sf_dir):
     after = {r["doc_id"] for r in res.packed.collect()}
     assert victim not in after
     assert after < survivors                   # strictly fewer, same pool
-    res.unpersist()
 
 
 def test_write_training_shards_roundtrip(spark, sf_dir, tmp_path):
@@ -62,7 +59,7 @@ def test_write_training_shards_roundtrip(spark, sf_dir, tmp_path):
     res = prepare_training_data(docs, shard_budget=200, bucket_bits=2)
     manifest = {m["shard_id"]: (m["n_docs"], m["n_tokens"])
                 for m in res.manifest.collect()}
-    write_training_shards(res, str(tmp_path))   # releases caches
+    write_training_shards(res, str(tmp_path))
     back = spark.read.parquet(str(tmp_path / "shards"))
     got = {r["shard_id"]: (r["n"], r["t"]) for r in
            back.groupBy("shard_id")
@@ -96,4 +93,3 @@ def test_mixture_zero_rate_empties_the_shards(spark, sf_dir):
                        ("en", "de", "fr", "es", "zh")},
         shard_budget=200, bucket_bits=2)
     assert res.manifest.count() == 0
-    res.unpersist()
