@@ -33,9 +33,9 @@ Scale shape (the 100 TB lens):
   dropped. Connected-component dedup exists separately
   (operators/components.py) for callers who want cluster semantics.
 - The flags frame feeds both the near-dup subplan and the final
-  stats aggregate, so it is persisted (MEMORY_AND_DISK) at the branch
-  point — the stage boundary a production run would checkpoint to
-  parquet anyway (plans/checkpoint.py is the durable tool); without
+  stats aggregate, so one eager ``localCheckpoint`` fills it at the
+  branch point — the stage boundary a production run would checkpoint
+  to parquet anyway (plans/checkpoint.py is the durable tool); without
   it Spark re-derives the signal+gate+window subplan once per branch.
 """
 
@@ -137,11 +137,12 @@ def curate_flags(
                     F.col("is_keeper") & F.col("is_dropped").isNull())
         .drop("is_dropped")
     )
-    # Both internal boundaries are localCheckpoints, reclaimed by the
-    # ContextCleaner when the query's frames drop: there is no cache
-    # for callers to release (unpersisting the returned frame would be
-    # a no-op — cache entries are keyed on the exact plan, and `out` is
-    # a join over the boundary, not the boundary).
+    # The one internal boundary is the eager localCheckpoint above,
+    # reclaimed by the ContextCleaner when the query's frames drop:
+    # there is no cache for callers to release (unpersisting the
+    # returned frame would be a no-op — cache entries are keyed on the
+    # exact plan, and `out` is a join over the boundary, not the
+    # boundary).
     return out
 
 

@@ -47,7 +47,8 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipeline treats it as opaque), media_type cycles by doc_id,
     metadata derives from doc_id. Mirrors the pages synthesis pattern
     (sources/pages.py) so the DuckDB oracle can rebuild it exactly."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    from ..scans import cached_parquet
+    docs = cached_parquet(spark, f"{sf_dir}/documents.parquet")
     return docs.select(
         F.concat(F.lit("media://"), F.col("doc_id").cast("string")).alias("url"),
         F.element_at(

@@ -43,16 +43,23 @@ from .checkpoint import materialize
 BIG_PRIME = 1_000_000_007
 
 # ---------------------------------------------------------- cache hygiene
-# The driver runs all 35 registry queries sequentially in ONE session.
+# The driver runs all 52 registry queries sequentially in ONE session.
 # Queries that persist intermediates must release them, but only AFTER
 # the driver has materialized the returned DataFrame — so releases are
 # DEFERRED: each query registers its caches here, and the next query's
 # entry (the _managed wrapper on every registry function) drains the
 # list. Nothing cached survives past the following query call, so a
-# 35-query session holds at most one query's caches at a time. Safe
+# 52-query session holds at most one query's caches at a time. Safe
 # for checkpoint blocks too (checkpoint.materialize's handle): the
 # driver materializes a query's result BEFORE calling the next query,
 # so released data is never read again.
+#
+# Every call builds its plan afresh. The one DataFrame memo is
+# scans.cached_parquet, stamped with the files' mtime and size; Column
+# expression trees are memoized by the lru_cache builders. A returned
+# DataFrame must not be memoized: collecting it again reuses the
+# shuffle stages AQE already materialized, so it would serve the old
+# rows after the corpus is rewritten.
 _LIVE_CACHES: list[DataFrame] = []
 
 
@@ -76,31 +83,6 @@ PRED_GAZ = {s: ("STRUCT" if s == "window" else t)
             if s not in ("merge", "batch")}
 
 
-_DF_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _df_memo(spark: SparkSession, sf_dir: str, name: str, build):
-    """Memoized PURE-DAG intermediate frames (augmented corpora,
-    synthetic bench set, pages): same immutable plan object per
-    (application, sf_dir) — plan metadata reuse only, the same
-    contract as scans.cached_parquet (~50-250 ms of py4j/analysis
-    construction saved per registry build; every action still
-    computes from parquet). ONLY side-effect-free builders belong
-    here — anything that persists/checkpoints must stay per-call."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _DF_MEMO.get(key)
-    if df is None:
-        df = build()
-        _DF_MEMO[key] = df
-    return df
-
-
-def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized default-args synthesize_pages frame (pure DAG)."""
-    return _df_memo(spark, sf_dir, "pages",
-                    lambda: synthesize_pages(spark, sf_dir))
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized scan plan — ~100 ms of per-call driver analysis saved
     # on every registry build; data still read per action (scans.py)
@@ -111,16 +93,10 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _splits(sf_dir: str, table: str = "documents", scans: int = 1) -> int:
     """Driver-side scan-split estimate for a testdata table —
     ``scans`` multiplies for self-union plans that scan the file once
-    per branch. Memoized per path (os.stat only; see
-    dedup.scan_splits_of — replaces the ~100 ms-per-call df.rdd
-    probe, r6)."""
-    return scans * _splits_cached(f"{sf_dir}/{table}.parquet")
-
-
-@functools.lru_cache(maxsize=None)
-def _splits_cached(path: str) -> int:
+    per branch (os.stat only; see dedup.scan_splits_of — replaces the
+    ~100 ms-per-call df.rdd probe, r6)."""
     from ..operators.dedup import scan_splits_of
-    return scan_splits_of(path)
+    return scans * scan_splits_of(f"{sf_dir}/{table}.parquet")
 
 
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,11 +109,6 @@ def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_memo(spark, sf_dir, "emb",
-                    lambda: _emb_build(spark, sf_dir))
-
-
-def _emb_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings with splits-starvation repair (dedup._spread): the
     small local parquet yields 1-2 scan splits, so the hyperplane/
     centroid/cosine expression work downstream of it ran on 2 of 32
@@ -162,7 +133,7 @@ def _emb_dim(sf_dir: str) -> int:
 def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-identical html→text extraction, summarized per lang."""
     from ..sources.pages import extract_text
-    pages = _pages(spark, sf_dir)
+    pages = synthesize_pages(spark, sf_dir)
     ext = extract_text(F.col("html"))
     return pages.select(
         "lang", "text",
@@ -196,7 +167,7 @@ def _oracle_mentions(spark: SparkSession, sf_dir: str,
     gazetteer — the config whose end-to-end semantics have a SQL
     closed form (first occurrence of each present gazetteer word)."""
     gaz = gaz if gaz is not None else ORACLE_GAZETTEER
-    pages = _pages(spark, sf_dir)
+    pages = synthesize_pages(spark, sf_dir)
     sents = pages.select("url", F.lit(0).cast("int").alias("sent_id"), "text")
     # fused single-UDF stage (== unfused chain, tests/test_pipeline.py)
     return extract_mentions(
@@ -651,11 +622,6 @@ FROM n"""
 
 # ------------------------------------------------------------------- dedup
 def _augmented_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_memo(spark, sf_dir, "aug_exact",
-                    lambda: _augmented_exact_build(spark, sf_dir))
-
-
-def _augmented_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select("doc_id", "text")
     dup = d.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
@@ -686,11 +652,6 @@ FROM aug GROUP BY 1 HAVING count(*) > 1"""
 
 def _augmented_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + 80%-prefix near-copies of every 5th doc."""
-    return _df_memo(spark, sf_dir, "aug_near",
-                    lambda: _augmented_near_build(spark, sf_dir))
-
-
-def _augmented_near_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select("doc_id", "text")
     toks = F.split(F.col("text"), " ")
     trunc = F.concat_ws(
@@ -779,11 +740,6 @@ FROM verified WHERE j >= {_MIN_J}"""
 
 
 def _augmented_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_memo(spark, sf_dir, "aug_curate",
-                    lambda: _augmented_curate_build(spark, sf_dir))
-
-
-def _augmented_curate_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation input: documents + exact copies of every 10th doc
     (doc_id+1M, the q_dedup_exact augmentation with lang carried) +
     80%-prefix near-copies of every 5th (doc_id+2M, the
@@ -903,11 +859,6 @@ _DECON_N = 13   # the canonical GPT-3/Llama overlap width
 
 
 def _synth_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_memo(spark, sf_dir, "synth_bench",
-                    lambda: _synth_bench_build(spark, sf_dir))
-
-
-def _synth_bench_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stand-in benchmark set: the middle ~60% token
     slice of every 17th document (so contamination is real — those
     grams occur verbatim in the source docs — and the clean set is
@@ -1144,11 +1095,6 @@ def _multiline_expr() -> F.Column:
     )
 
 
-def _multiline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_memo(spark, sf_dir, "multiline", lambda: _docs(
-        spark, sf_dir).select("doc_id", _multiline_expr().alias("text")))
-
-
 def _sql_multiline(src: str, carry: str = "") -> str:
     """docs2 CTE mirroring :func:`_multiline_expr` over ``src``."""
     return f"""docs2 AS (
@@ -1170,8 +1116,9 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document line dedup (operators/lines.py): boilerplate
     lines occurring in >= 3 distinct docs stripped, survivors
     re-joined in order."""
-    out = lines_op.strip_common_lines(
-        _multiline_docs(spark, sf_dir), min_docs=_LINE_MIN_DOCS)
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", _multiline_expr().alias("text"))
+    out = lines_op.strip_common_lines(docs, min_docs=_LINE_MIN_DOCS)
     return out.select(F.col("doc_id").cast("long").alias("doc_id"),
                       "text", "n_kept", "n_dropped")
 
@@ -2316,7 +2263,7 @@ def q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side explode — no shuffle anywhere in the plan."""
     from ..operators.linkgraph import outlink_edges
 
-    return outlink_edges(_pages(spark, sf_dir))
+    return outlink_edges(synthesize_pages(spark, sf_dir))
 
 
 def _sql_outlinks() -> str:
@@ -2337,7 +2284,7 @@ def q_link_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain groupBy count; the oracle checks exactly that."""
     from ..operators.linkgraph import indegree, outlink_edges
 
-    edges = outlink_edges(_pages(spark, sf_dir)) \
+    edges = outlink_edges(synthesize_pages(spark, sf_dir)) \
         .where(F.col("internal"))
     deg = indegree(edges)
     return deg.where(F.col("indeg") >= _HUB_MIN_INDEG)
@@ -2357,7 +2304,7 @@ def q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is broadcast-sized at any corpus scale."""
     from ..operators.linkgraph import host_link_stats, outlink_edges
 
-    return host_link_stats(outlink_edges(_pages(spark, sf_dir)))
+    return host_link_stats(outlink_edges(synthesize_pages(spark, sf_dir)))
 
 
 def _sql_host_graph() -> str:
@@ -2378,7 +2325,7 @@ def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (the 100 TB shape), not driver-local mode."""
     from ..operators.linkgraph import link_pagerank
 
-    return link_pagerank(_pages(spark, sf_dir), n_iter=4)
+    return link_pagerank(synthesize_pages(spark, sf_dir), n_iter=4)
 
 
 def _sql_link_pagerank(n_iter: int = 4, damping: float = 0.85) -> str:
@@ -2396,7 +2343,7 @@ edges AS (
 def _internal_link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.linkgraph import outlink_edges
 
-    return outlink_edges(_pages(spark, sf_dir)) \
+    return outlink_edges(synthesize_pages(spark, sf_dir)) \
         .where(F.col("internal")).select("src", "dst")
 
 
@@ -2657,46 +2604,10 @@ JOIN marg mb ON mb.entity_name = p.obj"""
 def _managed(fn):
     """Registry wrapper: drain the previous query's deferred caches on
     entry (see cache-hygiene note at the top of this module)."""
-    import functools
-
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         _release_pending()
         return fn(spark, sf_dir)
-    return wrapped
-
-
-# Queries whose build is a PURE DAG — no persist, no checkpoint, no
-# collect/count, no deferred-release registration anywhere in their
-# construction — so the SAME immutable plan object can be returned on
-# repeated invocation (the _df_memo contract: plan-metadata reuse
-# only; every materialization still computes from the parquet files).
-# Queries with materialization side effects (eager checkpoints,
-# driver collects, managed persists) MUST rebuild per call and are
-# deliberately absent.
-_PURE_QUERIES = frozenset({
-    "q_extract_text", "q_mentions", "q_mention_type_counts",
-    "q_link_exact", "q_link_salted", "q_span_f1", "q_textstats",
-    "q_repetition", "q_langid", "q_quality_filter", "q_fingerprint",
-    "q_dedup_exact", "q_minhash_pairs", "q_decontaminate",
-    "q_quota_sample", "q_mixture_sample", "q_pii_scrub",
-    "q_line_dedup", "q_simhash", "q_simhash_pairs", "q_embdup",
-    "q_embdup_lsh", "q_knn", "q_knn_lsh", "q_pricing",
-    "q_top_orders", "q_order_priority", "q_events", "q_outlinks",
-    "q_link_hubs", "q_host_graph", "q_warc_roundtrip",
-    "q_media_meta", "q_media_frames", "q_media_features",
-    "q_predicates", "q_verified_mentions", "q_disputed_mentions",
-    "q_cocitation",
-})
-
-
-def _pure(name, fn):
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _df_memo(spark, sf_dir, name,
-                        lambda: fn(spark, sf_dir))
     return wrapped
 
 
@@ -2754,10 +2665,7 @@ QUERIES = {
     "q_hits": q_hits,
     "q_cocitation": q_cocitation,
 }
-QUERIES = {
-    name: _managed(_pure(name, fn) if name in _PURE_QUERIES else fn)
-    for name, fn in QUERIES.items()
-}
+QUERIES = {name: _managed(fn) for name, fn in QUERIES.items()}
 
 ORACLE_SQL = {
     "q_hot_surfaces": _sql_hot_surfaces(),

@@ -16,6 +16,11 @@ directory: the newest mtime and the total size of the files under
 it), so a file rewritten in place gets a fresh scan instead of a plan
 over the old file listing. A path that cannot be stat'ed locally (a
 remote URI) is read fresh on every call.
+
+This is the library's only DataFrame memo. A bare scan has no shuffle
+stage, so handing out the same object again cannot replay results that
+AQE materialized for an earlier action; a memoized query frame would
+(see the cache-hygiene note in plans/queries.py).
 """
 
 from __future__ import annotations

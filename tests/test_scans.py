@@ -32,3 +32,30 @@ def test_rewritten_directory_reads_new_rows(spark, tmp_path):
     spark.createDataFrame([(i,) for i in range(10, 16)], "id long") \
         .write.mode("overwrite").parquet(path)
     assert _ids(cached_parquet(spark, path)) == list(range(10, 16))
+
+
+def test_registry_query_reads_rewritten_corpus(spark, tmp_path):
+    """A registry query over a corpus directory that is rewritten in
+    place returns the new rows, through the registry wrapper and when
+    called directly: no DataFrame outside ``cached_parquet`` outlives
+    a call."""
+    from promptner_spark.plans.queries import QUERIES, q_dedup_exact
+
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/documents.parquet"
+
+    def groups(run):
+        return sorted((r["n_docs"], r["keeper_id"])
+                      for r in run(spark, sf_dir).collect())
+
+    # doc_id % 10 == 0 gains a +1M copy, so doc 0 (and 10) form groups
+    spark.createDataFrame([(0, "a"), (1, "b"), (2, "b")],
+                          "doc_id long, text string") \
+        .write.parquet(path)
+    assert groups(QUERIES["q_dedup_exact"]) == [(2, 0), (2, 1)]
+    assert groups(q_dedup_exact) == [(2, 0), (2, 1)]
+    spark.createDataFrame([(10, "c"), (11, "d"), (12, "c"), (13, "e")],
+                          "doc_id long, text string") \
+        .write.mode("overwrite").parquet(path)
+    assert groups(QUERIES["q_dedup_exact"]) == [(3, 10)]
+    assert groups(q_dedup_exact) == [(3, 10)]

@@ -8,13 +8,15 @@ parquet dir; compare row count, column names/types, and exact values
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))))
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -41,7 +43,8 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or sorted(QUERIES)
-    spark = build_session(cores=8)
+    # one local core per CPU this process may run on, as perfbench does
+    spark = build_session(cores=len(os.sched_getaffinity(0)))
     con = duck_con(sf_dir)
     failures = 0
     for name in names:
