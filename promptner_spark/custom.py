@@ -2,9 +2,10 @@
 (`custom.py:82-94`): a closure that annotates ONE sentence at a time.
 
 Driver-side convenience only — it reuses the exact per-row chain the
-cluster path runs inside its fused UDF (prompt render → backend →
-parse → clean → align), so library users migrating from the reference
-get identical outputs, and scaling up means switching to
+cluster path runs inside its fused UDF (the chat/completion dispatch
+of ``operators.infer._make_generate`` → parse → clean → align), so
+library users migrating from the reference get identical outputs, and
+scaling up means switching to
 ``plans.pipeline.build_pipeline`` / ``operators.infer.extract_mentions``
 over a DataFrame instead of looping this closure.
 """
@@ -14,8 +15,9 @@ from __future__ import annotations
 from typing import Callable
 
 from .functions.prompts import PromptSpec
+from .operators.infer import _make_generate
 from .operators.model import Backend, default_backend_factory
-from .oracle.align import align_spans
+from .operators.parse import predict_tags
 from .oracle.clean import clean_answers
 from .oracle.parsing import parse_exemplar_answers
 
@@ -32,12 +34,11 @@ def get_ner_system(
 
     ``split_phrases`` explodes multi-word answers into single words
     (P3, `algorithms.py:158-175` — off in every reference eval)."""
-    spec = spec or PromptSpec()
-    backend = (backend_factory or default_backend_factory)()
-    prefix, suffix = spec.prefix(), PromptSpec.SUFFIX
+    generate = _make_generate(
+        (backend_factory or default_backend_factory)(), spec or PromptSpec())
 
     def get_entities(sentence: str):
-        raw = backend.generate([prefix + sentence + suffix])[0]
+        raw = generate([sentence])[0]
         if identify_types:
             surfaces, typestrings = parse_exemplar_answers(
                 raw, true_only=True, identify_types=True)
@@ -69,17 +70,9 @@ def get_tagging_system(
     backend_factory: Callable[[], Backend] | None = None,
 ) -> Callable[[str], list[str]]:
     """One-sentence IOB2 tagger: the ``perform_span`` equivalent
-    (`algorithms.py:67-70` + `parse_span` `algorithms.py:72-131`)."""
-    spec = spec or PromptSpec()
-    backend = (backend_factory or default_backend_factory)()
-    prefix, suffix = spec.prefix(), PromptSpec.SUFFIX
-
-    def tag(sentence: str) -> list[str]:
-        raw = backend.generate([prefix + sentence + suffix])[0]
-        surfaces, typestrings = parse_exemplar_answers(
-            raw, true_only=True, identify_types=True)
-        surfaces, typestrings = clean_answers(
-            list(surfaces), list(typestrings))
-        return align_spans(sentence, surfaces, typestrings)
-
-    return tag
+    (`algorithms.py:67-70` + `parse_span` `algorithms.py:72-131`) —
+    the fused extractor's per-row body, including its all-O answer
+    to a failed backend call or an unalignable answer."""
+    generate = _make_generate(
+        (backend_factory or default_backend_factory)(), spec or PromptSpec())
+    return lambda sentence: predict_tags(sentence, generate([sentence])[0])

@@ -19,7 +19,7 @@ from typing import Callable
 
 from ..functions.prompts import PromptSpec
 from ..oracle.stopwords import ENGLISH_STOPWORD_SET
-from .model import Backend, default_backend_factory
+from .model import Backend, default_backend_factory, generate_any
 
 ENTITY_TOKEN_TASK = (
     "In the sentence '[sent]'. The phrase '[token]' is an entity of type "
@@ -76,8 +76,9 @@ def generate_annotations(sentence: str, tokens: list[str],
         false_indices = sorted(rng.sample(false_indices, max_falses))
 
     # ONE batched model call for all tokens (the reference issues one
-    # HTTP request per token, `algorithms.py:237,241`)
-    outputs = backend.generate([p for _, p in prompts])
+    # HTTP request per token, `algorithms.py:237,241`), through the
+    # same chat/completion dispatch as the reference's ``__call__``
+    outputs = generate_any(backend, [p for _, p in prompts])
     annot_of = {i: out for (i, _), out in zip(prompts, outputs)}
 
     lines = ["Answer: "]

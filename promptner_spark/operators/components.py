@@ -20,25 +20,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: Rounds between fixpoint tests (see :func:`connected_components`).
+CHECK_EVERY = 2
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    checkpoint: bool = True,
-    check_every: int = 2,
 ) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id
     reachable. Node ids must be orderable (LONG or STRING).
 
-    ``check_every`` runs the fixpoint test (a labels⋈labels comparison
-    job) every k-th round instead of every round: with pointer
-    jumping most graphs converge in ~3 rounds, so k=2 halves the
-    driver-side barrier count for at most one redundant propagation
-    round — the label table is already stable then, so the extra
-    round is a cheap no-change pass. Convergence detection is still
-    exact (two consecutive identical label tables ⇒ fixpoint)."""
+    The fixpoint test (a labels⋈labels comparison job) runs every
+    ``CHECK_EVERY``-th round and on the last one: with pointer jumping
+    most graphs converge in ~3 rounds, so testing every second round
+    halves the driver-side barrier count for at most one redundant
+    propagation round — the label table is already stable then, so
+    the extra round is a cheap no-change pass. Convergence detection
+    is still exact (two consecutive identical label tables ⇒
+    fixpoint)."""
     # symmetrize + self-loops: every node maps to itself initially
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -46,8 +48,7 @@ def connected_components(
     # boundary its (possibly expensive) upstream lineage would re-run
     # per iteration. At cluster scale this is the materialized edges
     # table; here localCheckpoint doubles as the lineage truncation.
-    if checkpoint:
-        sym = sym.localCheckpoint(eager=True)
+    sym = sym.localCheckpoint(eager=True)
     nodes = sym.select(F.col("a").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("comp"))
 
@@ -74,14 +75,11 @@ def connected_components(
             .select("node",
                     F.coalesce("j_comp", "comp").alias("comp"))
         )
-        if checkpoint:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        # fixpoint test every check_every rounds (exact: two
-        # consecutive identical label tables ⇒ converged). No
-        # limit(1): Spark names a generated limit's counter from a
-        # JVM-wide sequence, so that plan compiled new classes on
-        # every call
-        if it % check_every == check_every - 1 or it == max_iter - 1:
+        new_labels = new_labels.localCheckpoint(eager=True)
+        # No limit(1) in the fixpoint test: Spark names a generated
+        # limit's counter from a JVM-wide sequence, so that plan
+        # compiled new classes on every call
+        if it % CHECK_EVERY == CHECK_EVERY - 1 or it == max_iter - 1:
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))

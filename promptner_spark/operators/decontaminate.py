@@ -18,10 +18,7 @@ Scale shape (the 100 TB lens):
 - The BENCHMARK side is small by nature (eval suites are thousands of
   documents / millions of grams, not billions), so its distinct gram
   hashes BROADCAST and the probe is a map-side hash join — the corpus
-  never moves. `broadcast_bench=False` falls back to a shuffle
-  equi-join on the gram hash for pathologically large benchmark
-  unions (both sides explode first, so the shuffle carries
-  (gram_h, doc_id) longs, never text).
+  never moves.
 - The per-doc hit aggregate runs over MATCHING grams only (a
   vanishing fraction of the corpus at n=13), and `decontaminate`
   turns it into a broadcast LEFT ANTI join back on doc_id — again no
@@ -79,7 +76,6 @@ def bench_gram_set(bench: DataFrame, n: int = DEFAULT_N,
 def contamination_report(docs: DataFrame, bench: DataFrame,
                          n: int = DEFAULT_N, text_col: str = "text",
                          id_col: str = "doc_id",
-                         broadcast_bench: bool = True,
                          bench_splits_hint: int | None = None) -> DataFrame:
     """(doc_id, n_hits) for every contaminated document — n_hits =
     number of DISTINCT document n-grams also present in the benchmark
@@ -88,9 +84,8 @@ def contamination_report(docs: DataFrame, bench: DataFrame,
     grams = gram_hashes(docs, n, text_col, id_col)
     bench_set = bench_gram_set(bench, n, text_col,
                                splits_hint=bench_splits_hint)
-    probe = F.broadcast(bench_set) if broadcast_bench else bench_set
     return (
-        grams.join(probe, "gram_h")
+        grams.join(F.broadcast(bench_set), "gram_h")
         .groupBy(F.col("id").alias(id_col))
         .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
@@ -98,17 +93,15 @@ def contamination_report(docs: DataFrame, bench: DataFrame,
 
 def decontaminate(docs: DataFrame, bench: DataFrame, n: int = DEFAULT_N,
                   text_col: str = "text", id_col: str = "doc_id",
-                  broadcast_bench: bool = True,
                   bench_splits_hint: int | None = None) -> DataFrame:
     """The clean corpus: documents sharing NO verbatim n-gram with the
     benchmark. The contaminated-id set is at most |matching docs|
     (small), so the anti-join back is broadcastable."""
     hit_ids = contamination_report(
-        docs, bench, n, text_col, id_col, broadcast_bench,
+        docs, bench, n, text_col, id_col,
         bench_splits_hint=bench_splits_hint
     ).select(id_col)
-    probe = F.broadcast(hit_ids) if broadcast_bench else hit_ids
-    return docs.join(probe, id_col, "left_anti")
+    return docs.join(F.broadcast(hit_ids), id_col, "left_anti")
 
 
 __all__ = ["gram_hashes", "bench_gram_set", "contamination_report",

@@ -32,9 +32,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
-    checkpoint_min_nodes: int = 10_000,
-    local_max_edges: int = 0,
     force_local: bool = False,
 ) -> DataFrame:
     """(src, dst) undirected edge list → (node, pagerank).
@@ -56,14 +53,18 @@ def pagerank(
     over random graphs showed can still flip the 6th dp when a 1-ulp
     order difference lands on a rounding boundary. Max magnitude:
     p·sum ≤ 850·10^12 ≪ 2^63. Floor-division mass loss per node per
-    step is < (deg+1)/10^12 — invisible at 6 output dp."""
+    step is < (deg+1)/10^12 — invisible at 6 output dp.
+
+    ``force_local`` runs the same recipe on the driver; only a caller
+    that bounds the edge count before any job should set it."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
     # force_local: the caller PROVES the graph is small from outside
     # knowledge (e.g. the registry's vocabulary bound: edges over a
     # v-entity vocabulary number ≤ v(v-1), known driver-side before
     # any job). Then the edge set is consumed exactly once — straight
-    # into the driver — so the probe job AND the checkpoint job both
-    # vanish: one Spark job total. r6: collect the DIRECTED distinct
+    # into the driver, with no checkpoint job: one Spark job total, and
+    # 4 power iterations on the driver beat ~10 distributed stage
+    # round trips of scheduler latency. r6: collect the DIRECTED distinct
     # set and symmetrize driver-side — the distributed
     # union(e, reverse(e)).distinct() evaluates the (often expensive,
     # e.g. in-row pair-exploding) `e` subtree once per union child
@@ -80,32 +81,10 @@ def pagerank(
     sym = e.unionByName(
         e.select(F.col("t").alias("s"), F.col("s").alias("t"))
     ).distinct()
-    # Materialize the symmetrized edge set ONCE before anything reads
-    # it: the size probe, the degree agg and the adjacency build all
-    # hang off sym, and without this the local-mode probe pays the
-    # union+distinct shuffle and the distributed fall-through then
-    # recomputes it (r3 verdict minor). One job total for sym either
-    # way the probe goes.
-    if checkpoint or local_max_edges:
-        sym = sym.localCheckpoint(eager=True)
-    # Small-graph local mode (GraphFrames-style hybrid): a bounded
-    # limit+collect probes the size in one cheap job over the
-    # checkpointed blocks; when the whole symmetric edge set fits
-    # under local_max_edges, 4 power iterations on the driver beat
-    # ~10 distributed stage round-trips of scheduler latency by
-    # 2-3 s. Values are identical BY CONSTRUCTION: both paths run the
-    # same fixed-point integer recipe, whose sums are summation-order
-    # independent (see docstring). OFF by default (local_max_edges=0):
-    # callers opt in explicitly — the bench registry does — so library
-    # users are never silently switched to driver-side execution (r3
-    # advisor note). The distributed path below is unchanged and is
-    # the 100 TB path.
-    if local_max_edges:
-        head = sym.limit(local_max_edges + 1).collect()
-        if len(head) <= local_max_edges:
-            return _pagerank_local(
-                edges.sparkSession, [(r["s"], r["t"]) for r in head],
-                n_iter, damping, node_type=sym.schema["s"].dataType)
+    # Materialize the symmetrized edge set ONCE: the degree agg and the
+    # adjacency build both hang off sym, and each would otherwise
+    # recompute the union+distinct shuffle.
+    sym = sym.localCheckpoint(eager=True)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # Degrees of BOTH endpoints ride on the adjacency table, attached
     # once before the loop: each iteration is then ONE join (ranks
@@ -118,19 +97,18 @@ def pagerank(
                          F.col("deg").alias("deg_t")), "t")
         .select("s", "t", F.col("deg").alias("deg_s"), "deg_t")
     )
-    if checkpoint:
-        adj = adj.localCheckpoint(eager=True)   # the loop invariant
+    adj = adj.localCheckpoint(eager=True)   # the loop invariant
     nodes = adj.select(F.col("t").alias("node"),
                        F.col("deg_t").alias("deg")).distinct()
     n = nodes.count()
     if n == 0:   # empty graph: empty result, not a division by zero
         return nodes.select("node", F.lit(0.0).alias("pagerank"))
     # Per-iteration lineage truncation only pays off when an iteration
-    # materializes real data: below checkpoint_min_nodes the loop is
+    # materializes real data: below PR_CHECKPOINT_MIN_NODES the loop is
     # plan-latency-bound and lazy iterations in one final job beat
     # eager materializations (values identical either way — the n
     # count above already sized the graph, so the decision is free).
-    checkpoint = checkpoint and n >= checkpoint_min_nodes
+    truncate = n >= PR_CHECKPOINT_MIN_NODES
     p_num, p_den = damping_ratio(damping)
     # exact integer scalars, computed driver-side with arbitrary
     # precision — every engine replaying the recipe gets the same two
@@ -150,7 +128,7 @@ def pagerank(
         # Truncate lineage every OTHER iteration: one eager job per two
         # iterations bounds plan growth without paying a
         # materialization per step (r2 checkpointed every iteration).
-        if checkpoint and (i % 2 == 1 or i == n_iter - 1):
+        if truncate and (i % 2 == 1 or i == n_iter - 1):
             pr = pr.localCheckpoint(eager=True)
     # Final 6-dp rounding in INTEGER space (half-up on the numerator):
     # Python round() is half-to-even on the binary double, Spark
@@ -170,6 +148,10 @@ def pagerank(
 # below 2^63 for the integer ops) while floor-loss stays ≥6 decimal
 # orders below the 6-dp output.
 PR_SCALE = 10**12
+
+# Node count from which pagerank's distributed loop truncates lineage
+# every other iteration.
+PR_CHECKPOINT_MIN_NODES = 10_000
 
 
 def damping_ratio(damping: float) -> tuple[int, int]:
@@ -222,10 +204,7 @@ def _pagerank_local(spark, sym_edges: list[tuple], n_iter: int,
 
 
 def pmi_edges(doc_entities: DataFrame, min_docs: int = 2,
-              max_entities_per_doc: int | None = None,
-              total_docs: int | None = None,
-              max_per_doc_hint: int | None = None,
-              assume_distinct: bool = False) -> DataFrame:
+              max_entities_per_doc: int | None = None) -> DataFrame:
     """(url, entity_name) doc-entity incidence → PMI-weighted
     co-occurrence edges (subj < obj, n_docs, pmi).
 
@@ -242,42 +221,20 @@ def pmi_edges(doc_entities: DataFrame, min_docs: int = 2,
     BEFORE ranking, so duplicate incidence rows with differing counts
     can't each consume a cap slot (r3 advisor note).
 
-    Plan-cost knobs for callers that already hold the answers (the
-    registry's persisted incidence table does):
-
-    - ``total_docs`` — the distinct-url count; supplied, the operator
-      runs zero extra count jobs. (The cap keeps ≥1 entity per url, so
-      the pre-cap count is exact either way.)
-    - ``max_per_doc_hint`` — the max per-url entity count; when it
-      proves no doc exceeds the cap, the row_number window (a
-      url-partitioned shuffle) is skipped entirely.
-    - ``assume_distinct`` — input already distinct on
-      (url, entity_name): skip the defensive distinct.
-
-    Both marginal joins broadcast (vocabulary-sized)."""
+    The flat form is the one that can weight the cap by mention
+    count; a caller holding per-url entity sets (and the doc count
+    and max set size) uses :func:`pmi_edges_from_docsets`, which
+    takes those as hints. Both marginal joins broadcast
+    (vocabulary-sized)."""
     has_counts = "n_mentions" in doc_entities.columns
-    if not has_counts and assume_distinct:
-        # the flat distinct path is equivalent to grouping per url and
-        # running the set-based plan — one shuffle less (no self-join)
-        grouped = doc_entities.groupBy("url").agg(
-            F.sort_array(F.collect_set("entity_name")).alias("ents"))
-        return pmi_edges_from_docsets(
-            grouped, min_docs=min_docs,
-            max_entities_per_doc=max_entities_per_doc,
-            total_docs=total_docs, max_per_doc_hint=max_per_doc_hint)
-    cap_needed = max_entities_per_doc is not None and not (
-        max_per_doc_hint is not None
-        and max_per_doc_hint <= max_entities_per_doc)
     if has_counts:
         # one row per (url, entity) with the summed mention count —
         # this is also the dedup pass, no extra distinct needed
         ents = doc_entities.groupBy("url", "entity_name").agg(
             F.sum("n_mentions").alias("n_mentions"))
     else:
-        ents = doc_entities.select("url", "entity_name")
-        if not assume_distinct:
-            ents = ents.distinct()
-    if cap_needed:
+        ents = doc_entities.select("url", "entity_name").distinct()
+    if max_entities_per_doc is not None:
         from pyspark.sql import Window
         order = ([F.desc("n_mentions")] if has_counts else []) + [
             F.asc("entity_name")]
@@ -289,9 +246,8 @@ def pmi_edges(doc_entities: DataFrame, min_docs: int = 2,
     # groupBy output / distinct input, filtered by a per-key window —
     # so no second distinct pass (r3 verdict: it cost a full shuffle)
     ents = ents.select("url", "entity_name")
-    total = total_docs if total_docs is not None else \
-        ents.select("url").distinct().count()
-    total = max(total, 1)
+    # the cap keeps ≥1 entity per url, so this count is the pre-cap one
+    total = max(ents.select("url").distinct().count(), 1)
     marg = ents.groupBy("entity_name").agg(
         F.count(F.lit(1)).alias("c_single"))
     a, b = ents.alias("a"), ents.alias("b")
@@ -389,7 +345,12 @@ def pmi_edges_from_docsets(doc_sets: DataFrame, min_docs: int = 2,
     canonicalization stage naturally produces, it is ~|docs| rows
     regardless of entity fanout, and nothing here keys on a hub
     entity. (Mention-count-weighted capping needs the flat form —
-    use pmi_edges.)"""
+    use pmi_edges.)
+
+    ``total_docs`` (the url count) and ``max_per_doc_hint`` (the
+    largest set size) are answers a caller may already hold, as q_pmi
+    does: given them, the operator runs no count job, and skips the
+    cap slice when no set exceeds ``max_entities_per_doc``."""
     ents = doc_sets.select("url", F.col(ents_col).alias("ents"))
     cap_needed = max_entities_per_doc is not None and not (
         max_per_doc_hint is not None
@@ -417,7 +378,7 @@ HITS_SCALE = 10**6
 
 
 def hits(edges: DataFrame, n_iter: int = 4, src: str = "src",
-         dst: str = "dst", checkpoint: bool = True) -> DataFrame:
+         dst: str = "dst") -> DataFrame:
     """HITS hubs/authorities over a DIRECTED edge list →
     (node, hub, authority), fixed-point integer arithmetic.
 
@@ -449,18 +410,15 @@ def hits(edges: DataFrame, n_iter: int = 4, src: str = "src",
     recomputed lineage."""
     if n_iter < 1:
         raise ValueError(f"hits() needs n_iter >= 1, got {n_iter}")
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")) \
+        .distinct().localCheckpoint(eager=True)
     nodes = e.select(F.col("s").alias("node")).unionByName(
-        e.select(F.col("t").alias("node"))).distinct()
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
+        e.select(F.col("t").alias("node"))).distinct() \
+        .localCheckpoint(eager=True)
 
     def _normalized(raw: DataFrame) -> DataFrame:
         # raw: (node, v) integer sums; rescale so max == HITS_SCALE
-        if checkpoint:
-            raw = raw.localCheckpoint(eager=True)
+        raw = raw.localCheckpoint(eager=True)
         m = raw.agg(F.max("v")).collect()[0][0]
         if not m:   # no edges at all
             return raw

@@ -110,7 +110,7 @@ def host_link_stats(edges: DataFrame) -> DataFrame:
 
 
 def link_pagerank(pages: DataFrame, n_iter: int = 4,
-                  damping: float = 0.85, **pagerank_kw) -> DataFrame:
+                  damping: float = 0.85) -> DataFrame:
     """PageRank over the internal page-link graph: (node, pagerank).
     Distinct directed edges feed the fixed-point operator (which
     symmetrizes, like the entity-graph caller)."""
@@ -119,7 +119,7 @@ def link_pagerank(pages: DataFrame, n_iter: int = 4,
     edges = outlink_edges(pages).where(F.col("internal")) \
         .select("src", "dst").distinct()
     return pagerank(edges, n_iter=n_iter, damping=damping,
-                    src="src", dst="dst", **pagerank_kw)
+                    src="src", dst="dst")
 
 
 __all__ = ["HREF_PATTERN", "HOST_PATTERN", "host_of", "parse_outlinks",

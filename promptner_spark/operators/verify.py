@@ -11,15 +11,15 @@ differ (`algorithms.py:290-369`). Spark-first:
     type extraction (A4) → per-batch dispute subset → C8 prompt →
     batched inference → 3-way resolution — all inside the same task.
 
-Zero joins and zero extra shuffles on the happy path: the sentence
+Zero joins and zero extra shuffles: the sentence
 text rides on the mention row (one Arrow column) instead of being
 re-fetched via a mentions ⋈ sentences shuffle join (VERDICT r1 defect
 #4), and the dispute query reuses the already-constructed backend on
 the (small) disagreeing subset of each batch — mirroring the
-reference's per-sentence control flow at batch granularity.
-
-A legacy path keeps the explicit join + verdict join-back (J4) for
-mention tables that do not carry ``text``.
+reference's per-sentence control flow at batch granularity. A
+mention table without ``text`` is rejected: the extractor carries it
+(``extract_mentions(..., carry=("text",))``), so there is no
+mentions ⋈ sentences join path.
 
 Resolution semantics (reference parity):
 
@@ -37,17 +37,10 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..functions.prompts import VerifySpec
 from .model import Backend, default_backend_factory, generate_any
-
-_VERDICT = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("sent_id", T.IntegerType()),
-    T.StructField("mention_id", T.IntegerType()),
-    T.StructField("verify_raw", T.StringType()),
-])
 
 
 def _paren_type(answer: str) -> str:
@@ -61,36 +54,42 @@ def _paren_type(answer: str) -> str:
 
 def verify_types(
     mentions: DataFrame,
-    sentences: DataFrame | None = None,
+    *,
     backend_factory: Callable[[], Backend] | None = None,
     resolve_disputes: bool = False,
     spec: VerifySpec | None = None,
 ) -> DataFrame:
-    """mentions → + ``type_verified`` and ``type_final`` columns.
-
-    If ``mentions`` carries a ``text`` column (extract_mentions
-    ``carry=("text",)``), verification is a single fused mapInPandas
-    pass with no joins; otherwise ``sentences`` (url, sent_id, text)
-    is required and the legacy shuffle-join path runs."""
+    """mentions → + ``type_verified`` and ``type_final`` columns, in a
+    single fused mapInPandas pass with no joins. ``mentions`` must
+    carry the sentence ``text`` (extract_mentions
+    ``carry=("text",)``); without it this raises ``ValueError``."""
+    if "text" not in mentions.columns:
+        raise ValueError(
+            "mentions has no 'text' column — carry it out of "
+            "extract_mentions(..., carry=(\"text\",))")
     backend_factory = backend_factory or default_backend_factory
     spec = spec or VerifySpec()
+    out_schema = T.StructType(
+        list(mentions.schema.fields)
+        + [T.StructField("type_verified", T.StringType(), True),
+           T.StructField("type_final", T.StringType(), True)])
 
-    if "text" in mentions.columns:
-        return _verify_fused(mentions, backend_factory, resolve_disputes,
-                             spec)
-    if sentences is None:
-        raise ValueError(
-            "mentions has no 'text' column and no sentences table was "
-            "given — carry text out of extract_mentions or pass sentences")
-    return _verify_joined(mentions, sentences, backend_factory,
-                          resolve_disputes, spec)
+    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        backend = backend_factory()
+        for pdf in batches:
+            verified, final = _verify_batch(
+                backend, pdf["text"].tolist(), pdf["surface"].tolist(),
+                pdf["type"].tolist(), resolve_disputes, spec)
+            yield pdf.assign(type_verified=verified, type_final=final)
+
+    return mentions.mapInPandas(infer, schema=out_schema)
 
 
 def _verify_batch(backend: Backend, texts: list[str], surfaces: list[str],
                   first_types: list[str], resolve_disputes: bool,
                   spec: VerifySpec = VerifySpec(),
                   ) -> tuple[list[str], list[str]]:
-    """The shared per-batch core: C7 query for every row, then (in
+    """The per-batch core: C7 query for every row, then (in
     dispute mode) one batched C8 query over the disagreeing subset.
     Returns (type_verified, type_final) lists."""
     raws = generate_any(
@@ -115,62 +114,3 @@ def _verify_batch(backend: Backend, texts: list[str], surfaces: list[str],
                 final[i] = d
     return verified, final
 
-
-def _verify_fused(mentions: DataFrame,
-                  backend_factory: Callable[[], Backend],
-                  resolve_disputes: bool,
-                  spec: VerifySpec = VerifySpec()) -> DataFrame:
-    out_schema = T.StructType(
-        list(mentions.schema.fields)
-        + [T.StructField("type_verified", T.StringType(), True),
-           T.StructField("type_final", T.StringType(), True)])
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = backend_factory()
-        for pdf in batches:
-            verified, final = _verify_batch(
-                backend, pdf["text"].tolist(), pdf["surface"].tolist(),
-                pdf["type"].tolist(), resolve_disputes, spec)
-            yield pdf.assign(type_verified=verified, type_final=final)
-
-    return mentions.mapInPandas(infer, schema=out_schema)
-
-
-def _verify_joined(mentions: DataFrame, sentences: DataFrame,
-                   backend_factory: Callable[[], Backend],
-                   resolve_disputes: bool,
-                   spec: VerifySpec = VerifySpec()) -> DataFrame:
-    """Legacy path: fetch text via equi-join, run the same batch core,
-    join the verdict back on (url, sent_id, mention_id) (join J4)."""
-    withp = (
-        mentions.join(sentences.select("url", "sent_id", "text"),
-                      ["url", "sent_id"])
-        .select("url", "sent_id", "mention_id", "surface", "type", "text")
-    )
-
-    verdict_schema = T.StructType(list(_VERDICT.fields[:3]) + [
-        T.StructField("type_verified", T.StringType(), True),
-        T.StructField("type_final_v", T.StringType(), True),
-    ])
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = backend_factory()
-        for pdf in batches:
-            verified, final = _verify_batch(
-                backend, pdf["text"].tolist(), pdf["surface"].tolist(),
-                pdf["type"].tolist(), resolve_disputes, spec)
-            yield pd.DataFrame({
-                "url": pdf["url"].values,
-                "sent_id": pdf["sent_id"].values,
-                "mention_id": pdf["mention_id"].values,
-                "type_verified": verified,
-                "type_final_v": final,
-            })
-
-    verdicts = withp.mapInPandas(infer, schema=verdict_schema)
-    out = mentions.join(verdicts, ["url", "sent_id", "mention_id"], "left")
-    # a left-join miss (defensive; every mention gets a verdict row)
-    # keeps the first-pass type
-    return out.withColumn(
-        "type_final", F.coalesce(F.col("type_final_v"), F.col("type"))
-    ).drop("type_final_v")

@@ -1730,23 +1730,28 @@ FROM events GROUP BY event_type"""
 
 
 # ---------------------------------------------------- full pipeline (no SQL)
-def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full multiword-gazetteer KG pipeline (sentence chunking, SP1
-    subsequence quirks, fuzzy linking, canonicalization, co-occurrence
-    triple counting) — value-exact vs :func:`_sql_pipeline_triples`.
-
-    ``portable_fuzzy`` switches the fuzzy-linking LSH band hash from
-    xxhash64 to the md5 family DuckDB replays exactly (the q_knn_ivf
-    pattern: an engine-portable config choice on an O(vocab) code
-    path, not a semantics change — parity with the fast family is
-    pinned by tests/test_pipeline_oracle.py)."""
+def _pipeline_triples(spark: SparkSession, sf_dir: str,
+                      portable_fuzzy: bool) -> DataFrame:
     from .pipeline import build_pipeline
-    res = build_pipeline(spark, sf_dir, portable_fuzzy=True)
+    res = build_pipeline(spark, sf_dir, portable_fuzzy=portable_fuzzy)
     _defer_release(*res.cached)
     return res.triple_counts.select(
         "subj", "pred", "obj",
         F.col("n_sents").cast("long").alias("n_sents"),
         F.col("n_docs").cast("long").alias("n_docs"))
+
+
+def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full multiword-gazetteer KG pipeline (sentence chunking, SP1
+    subsequence quirks, fuzzy linking, canonicalization, co-occurrence
+    triple counting) — value-exact vs :func:`_sql_pipeline_triples`.
+
+    The fuzzy-linking LSH bands use the md5 family DuckDB replays
+    exactly (``portable_fuzzy``; the q_knn_ivf pattern: an
+    engine-portable config choice on an O(vocab) code path, not a
+    semantics change — parity with the fast family is pinned by
+    tests/test_pipeline_oracle.py)."""
+    return _pipeline_triples(spark, sf_dir, portable_fuzzy=True)
 
 
 def q_pipeline_triples_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1759,13 +1764,7 @@ def q_pipeline_triples_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-family parity is pinned instead by
     tests/test_pipeline_oracle.py (same verified pairs on the sf
     corpus) and the portable variant stays the correctness entry."""
-    from .pipeline import build_pipeline
-    res = build_pipeline(spark, sf_dir, portable_fuzzy=False)
-    _defer_release(*res.cached)
-    return res.triple_counts.select(
-        "subj", "pred", "obj",
-        F.col("n_sents").cast("long").alias("n_sents"),
-        F.col("n_docs").cast("long").alias("n_docs"))
+    return _pipeline_triples(spark, sf_dir, portable_fuzzy=False)
 
 
 def _sql_pipeline_triples(sent_tokens: int = 25) -> str:
@@ -2507,8 +2506,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = explode_pairs(grouped, "ents", "src", "dst")
     v = len({row[2] for row in ALIAS_ROWS})
     return pagerank(edges, n_iter=4, damping=0.85,
-                    force_local=v * (v - 1) <= 100_000,
-                    local_max_edges=100_000)
+                    force_local=v * (v - 1) <= 100_000)
 
 
 def _sql_pagerank_over(edge_ctes: str, n_iter: int = 4,

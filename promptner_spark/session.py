@@ -67,6 +67,32 @@ CODEGEN_CACHE_ENTRIES = 2048
 # compiled 95 classes instead of 101.
 CODEGEN_ID_IN_CLASS_NAME = "false"
 
+# AQE coalesce floor (``spark.sql.adaptive.coalescePartitions.
+# minPartitionSize``, default 1m). With parallelismFirst (default) the
+# coalesce target is max(shuffleBytes/parallelism, THIS), so at cluster
+# scale the size term dominates and this floor is inert; it only bites
+# when a whole exchange is smaller than cores x 1 MB, where the default
+# floor collapses the read to ONE task and serializes every expression
+# pipelined after it (r6 stage audit: 0.5-1.7 s single-task tails in
+# the dedup/prep/triples queries — the post-shuffle work, not the
+# fetch, is the cost). 64k keeps such stages wide; per-partition
+# overhead at 64 KB is microseconds against the saved serial work.
+# An A/B sets another value through build_session(extra_conf=...).
+AQE_MIN_PARTITION_SIZE = "64k"
+
+# ``spark.sql.codegen.hugeMethodLimit`` (Spark default 65535).
+# Whole-stage-codegen methods above ~8 KB of bytecode are refused by
+# the JVM JIT (-XX:DontCompileHugeMethods, limit 8000) and run as
+# INTERPRETED bytecode forever — worse than Spark's own non-codegen
+# fallback. Spark's default only avoids the JVM's hard 64 KB method
+# cap, so stages in the 8-64 KB band ship uncompilable code: measured
+# r6 on the curate gate stage (75-trigram langid scores + quality +
+# argmax in one stage), 4.47 s vs 2.35 s per 100k rows once the limit
+# matches the JIT's. The generated code is a function of the PLAN, not
+# the input, so this holds on any cluster. An A/B sets another value
+# through build_session(extra_conf=...).
+HUGE_METHOD_LIMIT = "8000"
+
 
 def driver_mem() -> str:
     """The driver heap: ``$SPARK_DRIVER_MEM`` when set, else 40% of the
@@ -110,34 +136,10 @@ def build_session(
         "spark.sql.shuffle.partitions": str(n_shuffle),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # AQE coalesce floor. With parallelismFirst (default) the
-        # coalesce target is max(shuffleBytes/parallelism, THIS), so at
-        # cluster scale the size term dominates and this floor is inert;
-        # it only bites when a whole exchange is smaller than
-        # cores x 1 MB, where the default 1m floor collapses the read to
-        # ONE task and serializes every expression pipelined after it
-        # (r6 stage audit: 0.5-1.7 s single-task tails in the dedup/
-        # prep/triples queries — the post-shuffle work, not the fetch,
-        # is the cost). 64k keeps such stages wide; per-partition
-        # overhead at 64 KB is microseconds against the saved serial
-        # work. Scale-adaptive by construction — nothing here is tuned
-        # to this box's core count.
         "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
+            AQE_MIN_PARTITION_SIZE,
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Whole-stage-codegen methods above ~8 KB of bytecode are
-        # refused by the JVM JIT (-XX:DontCompileHugeMethods, default
-        # limit 8000) and run as INTERPRETED bytecode forever — worse
-        # than Spark's own non-codegen fallback. Spark's default
-        # hugeMethodLimit (65535) only avoids the JVM's hard 64 KB
-        # method cap, so stages in the 8-64 KB band ship uncompilable
-        # code: measured r6 on the curate gate stage (75-trigram
-        # langid scores + quality + argmax in one stage), 4.47 s vs
-        # 2.35 s per 100k rows once the limit matches the JIT's.
-        # Data-size-independent — the generated code is a function of
-        # the PLAN, not the input, so this holds on any cluster.
-        "spark.sql.codegen.hugeMethodLimit":
-            os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
+        "spark.sql.codegen.hugeMethodLimit": HUGE_METHOD_LIMIT,
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         "spark.sql.codegen.useIdInClassName": CODEGEN_ID_IN_CLASS_NAME,
         "spark.sql.session.timeZone": "UTC",

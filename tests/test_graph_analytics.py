@@ -189,9 +189,9 @@ def test_pmi_hub_document_cap(spark):
 
 def test_pagerank_local_mode_matches_distributed(spark):
     """The small-graph local fast path must reproduce the distributed
-    loop exactly (same rounded trajectory) — forced by toggling
-    local_max_edges on the same input. Local mode is opt-in
-    (default local_max_edges=0): library callers are never silently
+    loop exactly (same rounded trajectory) — selected by
+    force_local=True on the same input. Local mode is opt-in
+    (default force_local=False): library callers are never silently
     switched to driver-side execution (r3 advisor note)."""
     from promptner_spark.operators.graph_analytics import pagerank
 
@@ -201,7 +201,7 @@ def test_pagerank_local_mode_matches_distributed(spark):
         "src string, dst string")
     local = {(r["node"], r["pagerank"])
              for r in pagerank(edges, n_iter=4,
-                               local_max_edges=100_000).collect()}
+                               force_local=True).collect()}
     dist = {(r["node"], r["pagerank"])
             for r in pagerank(edges, n_iter=4).collect()}
     assert local == dist
@@ -227,41 +227,10 @@ def test_pagerank_local_mode_property_random_graphs(spark):
         edges = spark.createDataFrame(edges_py, "src string, dst string")
         local = {(r["node"], r["pagerank"])
                  for r in pagerank(edges, n_iter=4,
-                                   local_max_edges=1_000_000).collect()}
+                                   force_local=True).collect()}
         dist = {(r["node"], r["pagerank"])
                 for r in pagerank(edges, n_iter=4).collect()}
         assert local == dist, f"seed {seed}: local/distributed diverge"
-
-
-def test_pagerank_probe_is_cheap_and_reuses_sym(spark):
-    """The symmetrized edge set is localCheckpointed BEFORE the size
-    probe, so (a) local mode costs exactly two jobs (checkpoint fill +
-    bounded collect), and (b) when the probe falls through, the
-    distributed loop reads the materialized blocks instead of
-    recomputing the union+distinct (r3 verdict minor #3)."""
-    from promptner_spark.operators.graph_analytics import pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
-    sc = spark.sparkContext
-    group = "pagerank-probe-test"
-    sc.setJobGroup(group, "probe job count")
-    try:
-        pagerank(edges, n_iter=4, local_max_edges=10)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        # 1 checkpoint fill + ≤2 for the bounded collect (limit's
-        # incremental partition scan-up) — and crucially NOT the
-        # ~10-job distributed iteration cascade
-        assert len(jobs) <= 3, f"local-mode probe ran {len(jobs)} jobs"
-    finally:
-        sc.setJobGroup("", "")
-    # fall-through path: with checkpoint=False, ONLY the pre-probe
-    # sym checkpoint can explain a plan free of the re-derived
-    # Union+Distinct — proves the distributed loop reuses the
-    # materialized edge set instead of recomputing it
-    pr = pagerank(edges, n_iter=1, local_max_edges=2, checkpoint=False)
-    plan = pr._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" not in plan, plan
 
 
 # --------------------------------------------------- HITS / co-citation

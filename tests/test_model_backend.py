@@ -62,6 +62,53 @@ class GazetteerTransport:
         return {"choices": [{"text": answer}]}
 
 
+class ChatOnlyTransport(GazetteerTransport):
+    """A chat model's API: only ``/chat/completions`` answers."""
+
+    def __call__(self, endpoint, payload):
+        if endpoint != "/chat/completions":
+            raise ValueError(f"chat model has no {endpoint} endpoint")
+        return super().__call__(endpoint, payload)
+
+
+def test_single_sentence_api_uses_chat_dispatch(spark):
+    """custom.get_tagging_system and get_ner_system send a chat
+    model's prompt to the chat endpoint, as the fused extractor does
+    (reference ``__call__`` dispatch, `models.py:47-52`): the tagger's
+    mentions equal the extractor's for the same sentence."""
+    from promptner_spark.custom import get_ner_system, get_tagging_system
+    from promptner_spark.operators.infer import extract_mentions
+    from promptner_spark.operators.model import OpenAIBackend
+    from promptner_spark.oracle.spans import tags_to_mentions
+
+    def factory():
+        return OpenAIBackend(model="gpt-3.5-turbo",
+                             transport=ChatOnlyTransport())
+
+    sentence = "the stream joins a vector to the filter operator"
+    tags = get_tagging_system(backend_factory=factory)(sentence)
+    got = {(m["begin"], m["end"], m["surface"], m["type"])
+           for m in tags_to_mentions(sentence.lower().split(" "), tags)}
+    sents = spark.createDataFrame([("u", 0, sentence)],
+                                  "url string, sent_id int, text string")
+    want = {(r["begin"], r["end"], r["surface"], r["type"])
+            for r in extract_mentions(sents, backend_factory=factory,
+                                      partitions=1).collect()}
+    assert got == want and len(got) == 3
+    entities, _, _ = get_ner_system(backend_factory=factory)(sentence)
+    assert entities == ["stream", "vector", "filter"]
+    # the CoT exemplar generator (annotate) dispatches the same way
+    from promptner_spark.operators.annotate import generate_annotations
+    transport = ChatOnlyTransport()
+    labels = ["O", "B-SOURCE", "O", "O", "B-STRUCT", "O", "O", "B-OP", "O"]
+    block = generate_annotations(
+        sentence, sentence.split(" "), labels,
+        OpenAIBackend(model="gpt-3.5-turbo", transport=transport), defn="")
+    assert block.startswith("Answer: ") and "| True |" in block
+    assert transport.requests and {e for e, _ in transport.requests} == {
+        "/chat/completions"}
+
+
 def test_openai_chat_adapter_runs_fused_pipeline_unchanged(spark, sf_dir):
     """The fused extraction stage must produce identical mentions with
     the chat adapter (C3 path: message-list assembly + chat endpoint)
@@ -224,19 +271,28 @@ def test_real_backend_smoke_stub_wiring(spark, sf_dir):
     injected transport drives the UNCHANGED pipeline via
     build_pipeline(backend_factory=...) and reproduces the default
     deterministic pipeline byte-for-byte — proving the exact wiring a
-    first real-cluster run will use."""
+    first real-cluster run will use. The same factory then drives the
+    single-sentence tagger the script prints."""
+    import os
     import sys
-    sys.path.insert(0, "/root/repo/tools")
-    from real_backend_smoke import make_backend_factory
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
+    from real_backend_smoke import (
+        SMOKE_SENTENCE, make_backend_factory, tag_sentence,
+    )
 
+    from promptner_spark.custom import get_tagging_system
     from promptner_spark.plans.pipeline import build_pipeline
 
-    stub = build_pipeline(spark, sf_dir,
-                          backend_factory=make_backend_factory(
-                              "stub", "gpt-3.5-turbo"))
+    factory = make_backend_factory("stub", "gpt-3.5-turbo")
+    stub = build_pipeline(spark, sf_dir, backend_factory=factory)
     default = build_pipeline(spark, sf_dir)
     cols = ["url", "sent_id", "begin", "end", "surface", "type"]
     got = sorted(map(tuple, stub.mentions.select(*cols).collect()))
     want = sorted(map(tuple, default.mentions.select(*cols).collect()))
     stub.unpersist(); default.unpersist()
     assert got == want and len(got) > 0
+    tags = tag_sentence(factory)
+    assert tags == get_tagging_system()(SMOKE_SENTENCE)
+    assert sum(t != "O" for t in tags) == 3

@@ -130,23 +130,16 @@ def test_fused_verify_has_no_join_or_shuffle(spark, sf_dir):
     assert v.count() > 0
 
 
-def test_joined_fallback_matches_fused(spark, sf_dir):
-    """Legacy join path (no text column) and fused path produce the
-    same verified table."""
-    from promptner_spark.operators.infer import extract_mentions
-    from promptner_spark.operators.verify import verify_types
-    from promptner_spark.sources.pages import pages_with_extracted_text
-    from promptner_spark.sources.sentences import split_sentences
+def test_mentions_without_text_are_rejected(spark):
+    """There is no join path: a mention table that does not carry the
+    sentence text is refused before any plan is built."""
+    import pytest
 
-    sents = split_sentences(pages_with_extracted_text(spark, sf_dir))
-    cols = ["url", "sent_id", "mention_id", "surface", "type_final"]
-    fused = verify_types(extract_mentions(sents, carry=("text",)),
-                         resolve_disputes=True)
-    joined = verify_types(extract_mentions(sents), sents,
-                          resolve_disputes=True)
-    a = sorted(tuple(r) for r in fused.select(*cols).collect())
-    b = sorted(tuple(r) for r in joined.select(*cols).collect())
-    assert a == b and len(a) > 0
+    from promptner_spark.operators.verify import verify_types
+
+    rows = [("u", 0, 0, "spark", 0, 1, "SYS", None, "spark joins")]
+    with pytest.raises(ValueError, match="text"):
+        verify_types(_mentions(spark, rows).drop("text"))
 
 
 def test_verify_spec_default_matches_bare_templates():

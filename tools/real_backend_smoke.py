@@ -5,7 +5,9 @@ The sandbox can't reach a network or load HF weights, so the library's
 there only through injected transports. This script is the one file to
 ``spark-submit`` on a machine that CAN — it swaps a real backend into
 the unchanged pipeline via ``build_pipeline(backend_factory=...)`` and
-prints the first mention rows + triple counts.
+prints the first mention rows + triple counts, then tags one sentence
+through the single-sentence API (``custom.get_tagging_system``) with
+the same factory.
 
 Usage (pick one backend):
 
@@ -71,6 +73,18 @@ def make_backend_factory(mode: str, model: str, transport=None):
     return factory
 
 
+SMOKE_SENTENCE = "the stream joins a vector to the filter operator"
+
+
+def tag_sentence(factory) -> list[str]:
+    """IOB2 tags for SMOKE_SENTENCE through ``custom.get_tagging_system``
+    — the driver-side API, which must dispatch chat and completion
+    models the same way the pipeline's extractor does."""
+    from promptner_spark.custom import get_tagging_system
+
+    return get_tagging_system(backend_factory=factory)(SMOKE_SENTENCE)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("mode", choices=["openai", "hf", "stub"])
@@ -83,14 +97,15 @@ def main() -> None:
     from promptner_spark.session import build_session
 
     spark = build_session(app_name=f"real-backend-smoke-{args.mode}")
-    res = build_pipeline(spark, args.sf_dir,
-                         backend_factory=make_backend_factory(
-                             args.mode, args.model))
+    factory = make_backend_factory(args.mode, args.model)
+    res = build_pipeline(spark, args.sf_dir, backend_factory=factory)
     print("--- first mentions")
     res.mentions.show(args.limit, truncate=60)
     print("--- triple counts")
     res.triple_counts.orderBy("subj", "pred", "obj").show(args.limit)
     res.unpersist()
+    print("--- single-sentence tags")
+    print(list(zip(SMOKE_SENTENCE.split(" "), tag_sentence(factory))))
     spark.stop()
 
 
