@@ -1,21 +1,25 @@
 """Bench harness (driver contract): run the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on)
+and print ONE JSON line.
 
-Scaling evidence for the north_rule's N→4N criterion (no real cluster
-in this sandbox, per driver instruction): the flagship KG pipeline
-(pages → fused mention extraction → vocabulary-level linking →
-canonicalization → triples) runs on the SAME deterministic input at
-local[4] and local[16] (4× the cores). The input is the sf documents
-corpus replicated ×$SPARK_GRAFT_BENCH_REPLICATE (default 192,
-deterministic doc_id/url remapping — see sources/pages.py) so the
-measurement is compute-dominated, not fixed-overhead-dominated.
+Scaling evidence for the north_rule's N→4N criterion (one host stands
+in for the cluster): the flagship KG pipeline (pages → fused mention
+extraction → vocabulary-level linking → canonicalization → triples)
+runs on the SAME deterministic input at local[SCALE_LO] and
+local[SCALE_HI] (4× the cores). The input is the sf documents corpus
+replicated ×$SPARK_GRAFT_BENCH_REPLICATE (default 192, deterministic
+doc_id/url remapping — see sources/pages.py) so the measurement is
+compute-dominated, not fixed-overhead-dominated.
 
 Measurement discipline (each knob empirically forced, r2 profiling —
 full numbers in BENCH/BASELINE.md):
 
-- The 4→16 pair: neither level oversubscribes the 32-core box
-  (local[16] = 16 JVM task threads + 16 Python UDF workers).
+- The pair follows the host: SCALE_HI = max(4, CPUS // 2) and
+  SCALE_LO = SCALE_HI // 4, so local[SCALE_HI] = SCALE_HI JVM task
+  threads + SCALE_HI Python UDF workers fits the cores (4→16 on a
+  32-core box). Below 8 cores SCALE_HI floors at 4 to keep the 4×
+  ratio (1→4 on a 4-core box).
 - An untimed warm-up run of the SAME heavy plan shape before
   timing: the first execution of the replicated plan in a fresh JVM
   is 3-10× slower than steady state (heap growth + C2 JIT tiering of
@@ -29,20 +33,21 @@ full numbers in BENCH/BASELINE.md):
 - Shuffle dirs on /dev/shm when available: on one box the shared
   disk is a fixed-bandwidth resource that does not scale with cores;
   tmpfs is the faithful stand-in for per-node NVMe that does.
-- best-of-3 timed runs per level: the shared virtualized host shows
-  ±2× multi-second noise (steal <0.2% and flat memory bandwidth were
-  verified — the noise is JVM-internal, not the neighbors').
+- One rule for every timed value: each headline query, the portable
+  flagship, each scaling level and each ceiling probe is the best of
+  exactly N_RUNS = 3 timed runs, all recorded.
 
-A pure-JVM calibration probe runs at the same pair under the same
-discipline as the host ceiling reference.
+A pure-JVM probe and a naive python-UDF probe run at the same pair
+under the same discipline as the host ceiling references. Each level
+runs in its own Python process, so in its own JVM: ``python bench.py
+--level <body> <cores>`` builds the bench session, runs one warm-up
+and N_RUNS timed runs of one body, and prints a ``BENCH_TIMES`` line.
 
-r5: the HEADLINE suite is self-diagnosing too — a ~2 s fixed-work
-pure-JVM probe is interleaved every PROBE_EVERY queries (samples
-stamped into the artifact as ``jvm_probe``); when the probe spread
-exceeds 25%, queries timed inside a dirty probe window OR showing
-run dispersion are re-run once and the merged best is kept, with the
-retried set recorded. The benched flagship is the PRODUCTION
-xxhash64 band family; the portable md5 family (the
+The same pure-JVM probe at 24M rows is also interleaved every
+PROBE_EVERY headline queries; its samples and spread are stamped into
+the artifact as ``jvm_probe`` so a contended session shows. They are
+data only: no query is re-run on their account. The benched flagship
+is the PRODUCTION xxhash64 band family; the portable md5 family (the
 correctness-harness entry) is timed separately as
 ``flagship_portable_sec``.
 """
@@ -58,10 +63,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "4"))
-SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "16"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
+SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", max(4, CPUS // 2)))
+SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", SCALE_HI // 4))
 REPLICATE = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "192"))
+N_RUNS = 3        # timed runs per measured value; the best is reported
+PROBE_EVERY = 4   # headline queries between in-session JVM probes
 
 
 def _fast_local_dir() -> str | None:
@@ -117,43 +125,16 @@ def _bench_impl(name):
     return QUERIES.get(name)
 
 
-# ---- in-session host-noise probe (r4 verdict Next #1) --------------
-# The scaling campaign already carries a pure-JVM ceiling probe, but
-# the 20-query headline suite had no way to SAY "this session was
-# host-contended" — the r4 driver artifact showed 1.5-4x regressions
-# that four builder invocations of the same code never reproduced,
-# and the only forensic was the scaling runs' own spread. So: a ~2 s
-# fixed-work pure-JVM job (md5 chain + 1000-group agg, no Python, no
-# disk) runs BEFORE and AFTER the suite on the same session; its
-# samples are stamped into the artifact, and when the spread exceeds
-# PROBE_SPREAD_LIMIT the queries whose own 3 runs show contention
-# dispersion are re-run once (bounded) and the merged best is kept.
-PROBE_SPREAD_LIMIT = 0.25
-RETRY_DISPERSION = 1.8
-MAX_RETRIES = 12
-PROBE_EVERY = 4   # queries per probe window
+def _session(cores: int, app_name: str):
+    """Every bench session: local[cores], the heap pinned with -Xms,
+    tmpfs shuffle dirs when the box has them."""
+    from promptner_spark.session import build_session, driver_mem
 
-
-def _probe_once(spark) -> float:
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 24_000_000, 1, CPUS * 2).select(
-        (F.col("id") % 1000).alias("k"),
-        F.md5(F.md5(F.md5(F.md5(F.col("id").cast("string")))))
-        .alias("v"))
-    t0 = time.time()
-    (df.groupBy("k").agg(F.count(F.lit(1)).alias("n"),
-                         F.max("v").alias("m"))
-       .write.format("noop").mode("overwrite").save())
-    return round(time.time() - t0, 3)
-
-
-def _probe_samples(spark, n: int = 2) -> list[float]:
-    return [_probe_once(spark) for _ in range(n)]
-
-
-def _spread(samples: list[float]) -> float:
-    return round(max(samples) / min(samples) - 1.0, 3) if samples else 0.0
+    extra = {"spark.driver.extraJavaOptions": "-Xms" + driver_mem()}
+    local_dir = _fast_local_dir()
+    if local_dir:
+        extra["spark.local.dir"] = local_dir
+    return build_session(cores=cores, app_name=app_name, extra_conf=extra)
 
 
 def _materialize(df) -> None:
@@ -161,91 +142,18 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-_SCALE_SCRIPT = r"""
-import sys, time, os
-sys.path.insert(0, {repo!r})
-from promptner_spark.session import build_session, driver_mem
-from promptner_spark.plans.pipeline import build_pipeline
-extra = {{"spark.driver.extraJavaOptions":
-         "-Xms" + driver_mem()}}
-local_dir = {local_dir!r}
-if local_dir:
-    extra["spark.local.dir"] = local_dir
-spark = build_session(cores={cores}, app_name="bench-scale{cores}",
-                      extra_conf=extra)
-def run():
-    # vocab_scale=replicate: replica texts are token-perturbed and the
-    # gazetteer/alias/entity space grows with the corpus, so the
-    # vocabulary-level KG stages (linking resolution, canonicalize,
-    # triple counting) carry replica-proportional data and distribute
-    # — as they would on a real Zipf corpus — instead of reading as
-    # ~8s of parallelism-independent fixed latency (r2 finding #4).
-    res = build_pipeline(spark, {sf_dir!r}, replicate={replicate},
-                         vocab_scale={replicate})
-    res.triples.write.format("noop").mode("overwrite").save()
-    res.unpersist()
-run()   # warm the HEAVY plan shape (see module docstring)
-times = []
-for _ in range(3):
+def _timed(run) -> float:
     t0 = time.time()
     run()
-    times.append(time.time() - t0)
-print("BENCH_TIMES", " ".join(f"{{t:.3f}}".format(t=t) for t in times))
-spark.stop()
-"""
+    return round(time.time() - t0, 3)
 
 
-_CALIB_SCRIPT = r"""
-import sys, time, os
-sys.path.insert(0, {repo!r})
-from promptner_spark.session import build_session, driver_mem
-from pyspark.sql import functions as F
-extra = {{"spark.driver.extraJavaOptions":
-         "-Xms" + driver_mem()}}
-local_dir = {local_dir!r}
-if local_dir:
-    extra["spark.local.dir"] = local_dir
-spark = build_session(cores={cores}, app_name="calib{cores}",
-                      extra_conf=extra)
-df = spark.range(0, 30_000_000, 1, {cores}*2)
-def run():
-    # compute-dominated probe: chained md5 per row, 1k-group shuffle
-    (df.select((F.col("id") % 1000).alias("k"),
-               F.md5(F.md5(F.md5(F.md5(F.col("id").cast("string")))))
-               .alias("v"))
-       .groupBy("k").agg(F.count(F.lit(1)).alias("n"), F.max("v").alias("m"))
-       .write.format("noop").mode("overwrite").save())
-run()   # same warm-up discipline as the pipeline probe
-best = float("inf")
-for _ in range(3):
-    t0 = time.time()
-    run()
-    best = min(best, time.time() - t0)
-print("BENCH_SECONDS", best)
-spark.stop()
-"""
+def _runs(run) -> list[float]:
+    return [_timed(run) for _ in range(N_RUNS)]
 
 
-def _subprocess_seconds(script: str) -> float:
-    import subprocess
-
-    out = subprocess.run([sys.executable, "-c", script],
-                         capture_output=True, text=True, check=True)
-    line = [ln for ln in out.stdout.splitlines()
-            if ln.startswith("BENCH_SECONDS")][-1]
-    return float(line.split()[1])
-
-
-def _subprocess_times(script: str) -> list[float]:
-    """All timed-run wall times from a BENCH_TIMES line (best AND
-    median are reported — the r2 advisor flagged best-only quoting)."""
-    import subprocess
-
-    out = subprocess.run([sys.executable, "-c", script],
-                         capture_output=True, text=True, check=True)
-    line = [ln for ln in out.stdout.splitlines()
-            if ln.startswith("BENCH_TIMES")][-1]
-    return [float(x) for x in line.split()[1:]]
+def _spread(samples: list[float]) -> float:
+    return round(max(samples) / min(samples) - 1.0, 3) if samples else 0.0
 
 
 def _median(xs: list[float]) -> float:
@@ -254,90 +162,111 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
-_PY_CALIB_SCRIPT = r"""
-import sys, time, os
-sys.path.insert(0, {repo!r})
-from promptner_spark.session import build_session, driver_mem
-from pyspark.sql import functions as F
-import pandas as pd
-extra = {{"spark.driver.extraJavaOptions":
-         "-Xms" + driver_mem()}}
-local_dir = {local_dir!r}
-if local_dir:
-    extra["spark.local.dir"] = local_dir
-spark = build_session(cores={cores}, app_name="pycalib{cores}",
-                      extra_conf=extra)
-df = spark.range(0, 24_000_000, 1, {cores}).select(
-    F.concat(F.lit("u"), (F.col("id") % 97).cast("string")).alias("url"),
-    F.md5(F.col("id").cast("string")).alias("text"))
-def work(batches):
+# ---- the three measured bodies ---------------------------------------
+def _pipeline(spark, cores: int) -> None:
+    """The flagship at the scaling input. vocab_scale=replicate: replica
+    texts are token-perturbed and the gazetteer/alias/entity space grows
+    with the corpus, so the vocabulary-level KG stages (linking
+    resolution, canonicalize, triple counting) carry replica-proportional
+    data and distribute — as they would on a real Zipf corpus — instead
+    of reading as ~8 s of parallelism-independent fixed latency (r2
+    finding #4)."""
+    from promptner_spark.plans.pipeline import build_pipeline
+
+    res = build_pipeline(spark, SF_DIR, replicate=REPLICATE,
+                         vocab_scale=REPLICATE)
+    _materialize(res.triples)
+    res.unpersist()
+
+
+def _jvm_probe(spark, cores: int, rows: int = 30_000_000) -> None:
+    """Fixed-work pure-JVM job: chained md5 per row, then a 1000-group
+    shuffle agg — no Python, no disk. 30M rows as the ceiling probe,
+    24M as the in-session noise probe."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, rows, 1, cores * 2).select(
+        (F.col("id") % 1000).alias("k"),
+        F.md5(F.md5(F.md5(F.md5(F.col("id").cast("string"))))).alias("v"))
+    _materialize(df.groupBy("k").agg(F.count(F.lit(1)).alias("n"),
+                                     F.max("v").alias("m")))
+
+
+def _py_work(batches):
+    """Row-at-a-time string work, no fusion: the naive pandas UDF."""
+    import pandas as pd
+
     for pdf in batches:
         out = []
         for u, t in zip(pdf["url"], pdf["text"]):
             toks = (t + " " + t).split(" ")
             out.append((u, sum(len(x) for x in toks)))
         yield pd.DataFrame(out, columns=["url", "n"])
-def run():
-    (df.mapInPandas(work, "url string, n long")
-       .write.format("noop").mode("overwrite").save())
-run()
-best = float("inf")
-for _ in range(3):
-    t0 = time.time()
+
+
+def _py_probe(spark, cores: int) -> None:
+    """Naive mapInPandas stage (Arrow both ways, string row work)."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 24_000_000, 1, cores).select(
+        F.concat(F.lit("u"), (F.col("id") % 97).cast("string")).alias("url"),
+        F.md5(F.col("id").cast("string")).alias("text"))
+    _materialize(df.mapInPandas(_py_work, "url string, n long"))
+
+
+_BODIES = {"pipeline": _pipeline, "jvm_probe": _jvm_probe,
+           "py_probe": _py_probe}
+
+
+def _level(body: str, cores: int) -> None:
+    """Child entry: one warm-up of the SAME plan shape, then N_RUNS
+    timed runs, printed as one BENCH_TIMES line."""
+    spark = _session(cores, f"bench-{body}{cores}")
+
+    def run() -> None:
+        _BODIES[body](spark, cores)
+
     run()
-    best = min(best, time.time() - t0)
-print("BENCH_SECONDS", best)
-spark.stop()
-"""
+    times = _runs(run)
+    print("BENCH_TIMES", " ".join(f"{t:.3f}" for t in times))
+    spark.stop()
 
 
-def _py_calibration(lo: int, hi: int) -> float:
-    """Python-worker scaling ceiling: a NAIVE row-at-a-time pandas-UDF
-    stage (Arrow both ways, string row work, zero fusion) at both
-    levels. On this shared-memory box Arrow IPC + N python workers cap
-    well below the pure-JVM probe — the reference point for the
-    pipeline's extraction phase, which beats this probe because the
-    fused design amortizes the IPC (one crossing, 4096-row batches)."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    local_dir = _fast_local_dir()
-    t_lo = _subprocess_seconds(_PY_CALIB_SCRIPT.format(
-        repo=repo, cores=lo, local_dir=local_dir))
-    t_hi = _subprocess_seconds(_PY_CALIB_SCRIPT.format(
-        repo=repo, cores=hi, local_dir=local_dir))
-    return (t_lo / t_hi) / (hi / lo)
-
-
-def _hw_calibration(lo: int, hi: int) -> float:
-    """Host scaling ceiling: the same PURE-JVM Spark job (hash+shuffle+
-    agg, zero Python) at both parallelism levels. Whatever efficiency
-    THIS shows is the best any Spark workload can do on this box; the
-    pipeline's efficiency should be read relative to it."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    local_dir = _fast_local_dir()
-    t_lo = _subprocess_seconds(_CALIB_SCRIPT.format(
-        repo=repo, cores=lo, local_dir=local_dir))
-    t_hi = _subprocess_seconds(_CALIB_SCRIPT.format(
-        repo=repo, cores=hi, local_dir=local_dir))
-    return (t_lo / t_hi) / (hi / lo)
-
-
-def _pipeline_times(cores: int, sf_dir: str, replicate: int) -> list[float]:
+def _level_times(body: str, cores: int) -> list[float]:
     """Each level runs in its OWN python subprocess: PySpark reuses one
     JVM per process, so measuring both levels in-process would hand the
     second session a pre-aged heap (and the first session's
-    driver-memory). Fresh process = fresh JVM = fair comparison.
-    Within the process: one same-shape heavy warm-up, then 3 timed
-    runs, ALL reported (see module docstring for why)."""
-    script = _SCALE_SCRIPT.format(
-        repo=os.path.dirname(os.path.abspath(__file__)),
-        cores=cores, sf_dir=sf_dir, replicate=replicate,
-        local_dir=_fast_local_dir())
-    return _subprocess_times(script)
+    driver-memory). Fresh process = fresh JVM = fair comparison. Under
+    spark-submit the parent's gateway variables are dropped, or the
+    child would attach to the parent's JVM instead of launching one."""
+    import subprocess
+
+    env = {k: v for k, v in os.environ.items()
+           if not k.startswith("PYSPARK_GATEWAY_")}
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--level", body,
+         str(cores)],
+        env=env, capture_output=True, text=True, check=True)
+    line = [ln for ln in out.stdout.splitlines()
+            if ln.startswith("BENCH_TIMES")][-1]
+    return [float(x) for x in line.split()[1:]]
+
+
+def _calibration(body: str, lo: int, hi: int) -> float:
+    """Host scaling ceiling of one probe body: its best-of-3 at both
+    levels, as an efficiency. ``jvm_probe`` (hash+shuffle+agg, zero
+    Python) is the best any Spark workload can do on this box.
+    ``py_probe`` is the Python-worker ceiling: on a shared-memory box
+    Arrow IPC + N python workers cap well below the pure-JVM probe —
+    the reference point for the pipeline's extraction phase, which
+    beats this probe because the fused design amortizes the IPC (one
+    crossing, 4096-row batches)."""
+    t_lo = min(_level_times(body, lo))
+    t_hi = min(_level_times(body, hi))
+    return (t_lo / t_hi) / (hi / lo)
 
 
 def main() -> None:
-    from promptner_spark.session import build_session, driver_mem
-
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else 0.1
 
@@ -346,30 +275,30 @@ def main() -> None:
         f"select count(*) from '{SF_DIR}/documents.parquet'").fetchone()[0]
     if os.environ.get("SPARK_GRAFT_SKIP_SCALE"):
         # headline-only debug mode for bench-harness iteration: the
-        # driver always runs the full protocol (this env is never set
-        # there); zeros make an accidentally-skipped artifact obvious
+        # full protocol never sets this env; zeros make an
+        # accidentally-skipped artifact obvious
         times_lo = times_hi = [0.0]
         t_lo = t_hi = med_lo = med_hi = 1.0
         thr_lo = thr_hi = 0.0
         efficiency = efficiency_median = 0.0
         hw_ceiling = py_ceiling = 0.0
     else:
-        times_lo = _pipeline_times(SCALE_LO, SF_DIR, REPLICATE)
-        times_hi = _pipeline_times(SCALE_HI, SF_DIR, REPLICATE)
+        times_lo = _level_times("pipeline", SCALE_LO)
+        times_hi = _level_times("pipeline", SCALE_HI)
         t_lo, t_hi = min(times_lo), min(times_hi)
         med_lo, med_hi = _median(times_lo), _median(times_hi)
         thr_lo = n_docs_base * REPLICATE / t_lo
         thr_hi = n_docs_base * REPLICATE / t_hi
         efficiency = (thr_hi / thr_lo) / (SCALE_HI / SCALE_LO)
         efficiency_median = (med_lo / med_hi) / (SCALE_HI / SCALE_LO)
-        hw_ceiling = _hw_calibration(SCALE_LO, SCALE_HI)
-        py_ceiling = _py_calibration(SCALE_LO, SCALE_HI)
+        hw_ceiling = _calibration("jvm_probe", SCALE_LO, SCALE_HI)
+        py_ceiling = _calibration("py_probe", SCALE_LO, SCALE_HI)
 
-    extra = {"spark.driver.extraJavaOptions":
-             "-Xms" + driver_mem()}
-    if _fast_local_dir():
-        extra["spark.local.dir"] = _fast_local_dir()
-    spark = build_session(cores=CPUS, app_name="bench", extra_conf=extra)
+    spark = _session(CPUS, "bench")
+
+    def probe() -> float:
+        return _timed(lambda: _jvm_probe(spark, CPUS, rows=24_000_000))
+
     try:
         from promptner_spark.plans.pipeline import build_pipeline
         from promptner_spark.plans.queries import QUERIES
@@ -387,76 +316,23 @@ def main() -> None:
         warm_v = build_pipeline(spark, SF_DIR, with_verify=True)
         _materialize(warm_v.mentions)
         warm_v.unpersist()
-        _probe_once(spark)               # JIT the probe plan untimed
+        probe()                          # JIT the probe plan untimed
 
-        def time_query(name: str, n_runs: int = 3) -> list[float]:
-            fn = _bench_impl(name)
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.time()
-                _materialize(fn(spark, SF_DIR))
-                runs.append(round(time.time() - t0, 3))
-            return runs
-
-        # Probes are INTERLEAVED (every PROBE_EVERY queries), not just
-        # bracketing: a contention episode that spans one query's whole
-        # best-of-3 leaves all three runs uniformly slow — dispersion
-        # can't see it, but the window's probes can (measured on the
-        # first smoke of this protocol: a flagship timed 22 s in a
-        # dirty window vs 6 s clean, with run dispersion only 1.3).
+        # best-of-3, ALL runs recorded: a one-shot number folds
+        # first-execution JIT/codegen of that query's generated classes
+        # into the measurement (observed 3-4x one-shot swings on this
+        # host). Probes are interleaved every PROBE_EVERY queries, so a
+        # contention episode that spans one query's whole best-of-3
+        # shows in the artifact.
         names = [n for n in HEADLINE if _bench_impl(n) is not None]
         queries_runs: dict[str, list[float]] = {}
-        probes: list[float] = [_probe_once(spark)]
-        window_of: dict[str, int] = {}
+        probes: list[float] = [probe()]
         for i, name in enumerate(names):
-            # best-of-3, ALL runs recorded: a one-shot number folds
-            # first-execution JIT/codegen of that query's generated
-            # classes into the measurement (observed 3-4x one-shot
-            # swings on this host; the two-python-stage verify query
-            # needs a second repeat to reach steady state even after
-            # the verify-shaped warm-up)
-            window_of[name] = len(probes) - 1
-            queries_runs[name] = time_query(name)
+            fn = _bench_impl(name)
+            queries_runs[name] = _runs(
+                lambda: _materialize(fn(spark, SF_DIR)))
             if (i + 1) % PROBE_EVERY == 0 or i == len(names) - 1:
-                probes.append(_probe_once(spark))
-
-        # self-diagnosis: a query is suspect when its probe WINDOW was
-        # contended (either bracketing probe >25% above the session's
-        # cleanest probe) or its own runs show contention dispersion;
-        # suspects get ONE extra best-of-3, merged (bounded — and
-        # recorded, so the artifact says what happened instead of
-        # leaving a mystery regression)
-        clean = min(probes)
-        retried: list[str] = []
-        retry_skipped: list[str] = []
-        probe_retry: list[float] = []
-
-        def dirty_window(w: int) -> bool:
-            lo, hi = probes[w], probes[min(w + 1, len(probes) - 1)]
-            return max(lo, hi) > clean * (1 + PROBE_SPREAD_LIMIT)
-
-        def dispersed(runs: list[float]) -> bool:
-            # ignore the first run: it carries that query's codegen/
-            # JIT and is routinely 2-3x the steady state, which is
-            # not contention (the first smoke retried 12/20 queries
-            # off that false signal); contention shows as the LATER
-            # runs disagreeing with the best
-            steady = runs[1:] if len(runs) > 1 else runs
-            return max(steady) / min(runs) > RETRY_DISPERSION
-
-        if _spread(probes) > PROBE_SPREAD_LIMIT:
-            flagged = [n for n in names
-                       if dirty_window(window_of[n])
-                       or dispersed(queries_runs[n])]
-            for name in flagged[:MAX_RETRIES]:
-                queries_runs[name] = queries_runs[name] + time_query(name)
-                retried.append(name)
-            # no silent caps: flagged-but-unretried queries are
-            # recorded so the artifact says coverage was bounded,
-            # not that the suspects list ended at MAX_RETRIES
-            retry_skipped = flagged[MAX_RETRIES:]
-            if retried:
-                probe_retry = _probe_samples(spark)
+                probes.append(probe())
 
         queries = {n: min(runs) for n, runs in queries_runs.items()}
         total = sum(queries.values())
@@ -465,24 +341,13 @@ def main() -> None:
         # the production xxhash64 family (r4 verdict Next #2)
         portable_runs = [0.0]
         if "q_pipeline_triples" in QUERIES:
-            portable_runs = []
-            for _ in range(3):
-                t0 = time.time()
-                _materialize(QUERIES["q_pipeline_triples"](spark, SF_DIR))
-                portable_runs.append(round(time.time() - t0, 3))
-        probe_block = {
-            "samples": probes,
-            "spread": _spread(probes),
-            "retried": retried,
-        }
-        if retry_skipped:
-            probe_block["retry_skipped"] = retry_skipped
-        if probe_retry:
-            probe_block["post_retry"] = probe_retry
+            portable_runs = _runs(lambda: _materialize(
+                QUERIES["q_pipeline_triples"](spark, SF_DIR)))
+        probe_block = {"samples": probes, "spread": _spread(probes)}
     finally:
         spark.stop()
 
-    # The driver keeps only a bounded TAIL of stdout and parses the
+    # The harness keeps only a bounded TAIL of stdout and parses the
     # last JSON line — r3's line carried per-run arrays and a long
     # note, overflowing that window (BENCH_r03.json parsed: null).
     # So: ONE compact headline line on stdout (scaling summary, no
@@ -519,8 +384,9 @@ def main() -> None:
     detail["pipeline_scaling"].update({
         f"runs_local{SCALE_LO}": [round(t, 2) for t in times_lo],
         f"runs_local{SCALE_HI}": [round(t, 2) for t in times_hi],
-        "note": (f"{SCALE_LO}->{SCALE_HI} cores, no oversubscription "
-                 "at either level; 1 same-shape heavy warm-up + "
+        "note": (f"{SCALE_LO}->{SCALE_HI} cores on a {CPUS}-core "
+                 "session (SCALE_HI = max(4, CPUS // 2), SCALE_LO = "
+                 "SCALE_HI // 4); 1 same-shape heavy warm-up + "
                  "3 timed runs (all recorded) per level in a fresh "
                  "pre-sized pre-touched JVM, tmpfs shuffle dirs "
                  "(per-node-NVMe stand-in). Corpus is replicated "
@@ -545,4 +411,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--level"]:
+        _level(sys.argv[2], int(sys.argv[3]))
+    else:
+        main()

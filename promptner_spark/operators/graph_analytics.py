@@ -336,7 +336,7 @@ def pmi_edges_from_docsets(doc_sets: DataFrame, min_docs: int = 2,
     - the per-doc cap is an in-row ``slice`` of the name-sorted set —
       identical to the row_number window ordered by entity_name, with
       zero shuffle;
-    - pairs are emitted in-row (``inrow_pairs``) — the url-keyed
+    - pairs are emitted in-row (``explode_pairs``) — the url-keyed
       self-join disappears; the only wide exchanges left are the
       (subj, obj) count and the entity marginal count, both
       vocabulary-bounded aggregations with map-side partials.
@@ -452,7 +452,7 @@ def cocitation_counts(edges: DataFrame, min_count: int = 2,
                       src: str = "src", dst: str = "dst",
                       max_links_per_src: int | None = None) -> DataFrame:
     """Co-citation: (a, b, n_cocited) — how many sources link to BOTH
-    a and b (a < b). The in-row pair-emission shape (inrow_pairs, the
+    a and b (a < b). The in-row pair-emission shape (explode_pairs, the
     PMI/triples trick): group links per source into a sorted distinct
     array, emit pairs inside the row, ONE count shuffle — no edge
     self-join, which at web scale would square the hub fanout.

@@ -240,12 +240,10 @@ FROM mentions m LEFT JOIN aliases a ON m.surface = a.alias_norm"""
 
 # --------------------------------------------------------------------- G3
 def q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Materialized: canonicalize feeds a self-join (emit_triples) plus the
-    # counts agg — without the boundary the inference/parse UDF chain
-    # would re-run once per plan branch.
-    m, blocks = materialize(_oracle_mentions(spark, sf_dir))
-    _defer_release(blocks)
-    linked = linking.link_exact(m, linking.alias_df(spark))
+    # One linear chain (mentions → exact link → canonicalize → emit →
+    # counts): the extraction UDF has one consumer, so no boundary.
+    linked = linking.link_exact(_oracle_mentions(spark, sf_dir),
+                                linking.alias_df(spark))
     canonical = triples_op.canonicalize(linked)
     counts = triples_op.triple_counts(triples_op.emit_triples(canonical))
     return counts.select(

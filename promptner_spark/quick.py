@@ -71,10 +71,10 @@ class Quick:
         return f1
 
     @staticmethod
-    def genia(i: int, path: str = "/root/reference/data/Genia/sampletest1.iob2",
-              **kwargs) -> str:
-        """`main.py:44-46`: one Genia row, loaded through the S1 IOB2
-        reader (needs an active SparkSession)."""
+    def genia(i: int, path: str, **kwargs) -> str:
+        """`main.py:44-46`: row ``i`` of a Genia-style IOB2 file at
+        ``path``, loaded through the S1 IOB2 reader (needs an active
+        SparkSession)."""
         from pyspark.sql import SparkSession
 
         from .sources.iob2_io import read_iob2

@@ -178,7 +178,7 @@ def test_registry_queries_release_caches(spark, sf_dir):
 
     _release_pending()
     base = n_cached()
-    QUERIES["q_triples"](spark, sf_dir).count()
+    QUERIES["q_hot_surfaces"](spark, sf_dir).count()
     assert n_cached() > base  # the mention cache is live (by design)
     QUERIES["q_pricing"](spark, sf_dir).count()  # wrapper drains it
     assert n_cached() == base

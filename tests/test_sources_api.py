@@ -241,3 +241,21 @@ def test_quick_helpers(spark):
                        verbose=False)
     assert f1 == 1.0
     assert Quick.analyze(["O", "B-SRC"], ["O", "O"], verbose=False) == 0.0
+
+
+def test_quick_genia_reads_row_from_given_iob2_file(spark, tmp_path):
+    """``Quick.genia`` takes the IOB2 path from the caller and annotates
+    row ``i`` of it, as ``Quick.dataset`` does for an in-memory row."""
+    from promptner_spark.quick import Quick
+
+    src = tmp_path / "two_sentences.iob2"
+    src.write_text("the\tO\nstream\tB-SRC\njoins\tO\na\tO\nvector\tB-DATA\n\n"
+                   "a\tO\nwindow\tB-STRUCT\ncloses\tO\n\n")
+    ann = Quick.genia(0, str(src), verbose=False)
+    assert "stream | True |" in ann and "(SRC)" in ann
+    assert "window" not in ann
+    gold = spark.createDataFrame(
+        [("the stream joins a vector",
+          ["O", "B-SRC", "O", "O", "B-DATA"])],
+        "text string, exact_types array<string>")
+    assert ann == Quick.dataset(0, gold, verbose=False)
