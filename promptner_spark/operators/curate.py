@@ -55,7 +55,6 @@ def curate_flags(
     n_hashes: int = 16,
     band_size: int = 4,
     shingle_k: int = 3,
-    materialize: bool = True,
     splits_hint: int | None = None,
 ) -> DataFrame:
     """Per-document curation decisions over (doc_id, lang, text):
@@ -68,10 +67,6 @@ def curate_flags(
                      its exact-content (md5) group among gate-passing
                      docs.
     ``is_kept``    — keeper with no verified lower-id near-dup.
-
-    ``materialize=False`` returns the pure DAG (no eager checkpoint)
-    for plan inspection only — executing it pays the multi-consumer
-    recompute race the checkpoint exists to prevent.
     """
     nrm = docs.select(
         "doc_id", "lang", "text", L._norm(F.col("text")).alias("norm"))
@@ -108,12 +103,11 @@ def curate_flags(
     # plans against a tiny LogicalRDD instead of re-analyzing the
     # signal+gate+window tree (~0.5 s of driver time per action at
     # sf0.1 — the funnel runs four more actions over this). Storage is
-    # MEMORY_AND_DISK like the persist it replaces (spill-safe);
-    # blocks are reclaimed by the ContextCleaner when the query's
-    # frames drop. At corpus scale this is the stage boundary a
-    # production run checkpoints to parquet anyway (guide §5).
-    if materialize:
-        flagged = flagged.localCheckpoint(eager=True)
+    # MEMORY_AND_DISK like the persist it replaces (spill-safe); the
+    # owner of the unit of work frees the blocks
+    # (checkpoint.persisted_by). At corpus scale this is the stage
+    # boundary a production run checkpoints to parquet anyway (guide §5).
+    flagged = flagged.localCheckpoint(eager=True)
     # The keepers slice feeds the LSH subplan FOUR ways (two band
     # self-join sides, two jaccard-verify text lookups). Off the
     # checkpointed flags frame those four consumers are identical
@@ -137,12 +131,12 @@ def curate_flags(
                     F.col("is_keeper") & F.col("is_dropped").isNull())
         .drop("is_dropped")
     )
-    # The one internal boundary is the eager localCheckpoint above,
-    # reclaimed by the ContextCleaner when the query's frames drop:
-    # there is no cache for callers to release (unpersisting the
-    # returned frame would be a no-op — cache entries are keyed on the
-    # exact plan, and `out` is a join over the boundary, not the
-    # boundary).
+    # The one internal boundary is the eager localCheckpoint above.
+    # Its blocks are freed by whoever owns the unit of work (a
+    # registry call, via checkpoint.persisted_by), else by the
+    # ContextCleaner once the frames drop; `out.unpersist()` would be
+    # a no-op (cache entries are keyed on the exact plan, and `out` is
+    # a join over the boundary, not the boundary).
     return out
 
 

@@ -225,9 +225,8 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     entity_name, entity_key, eid) — the last three precomputed
     vocabulary-side by :func:`_enrich_resolution`.
 
-    Both internal boundaries are eager localCheckpoints, reclaimed by
-    the ContextCleaner when the query's frames drop; callers have
-    nothing to release.
+    Both internal boundaries are eager localCheckpoints; the owner of
+    the unit of work frees their blocks (checkpoint.persisted_by).
     """
     # Materialized eagerly (one vocabulary-sized job): (a) the
     # vocabulary is read by the exact/NIL and the fuzzy branches — one
@@ -242,7 +241,7 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     # full extraction lineage against the cache manager (the r6 stage
     # audit caught broadcast-side jobs re-running the scan→UDF chain
     # off the persisted form), and downstream actions re-analyze a
-    # tiny plan. Blocks are ContextCleaner-reclaimed.
+    # tiny plan.
     vocab = mentions.select(
         norm_surface(F.col("surface")).alias("m_norm")).distinct() \
         .localCheckpoint(eager=True)

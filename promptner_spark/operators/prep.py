@@ -52,8 +52,8 @@ class PrepResult:
     assigns every surviving doc to a training shard (doc_id, lang,
     n_tok, shard_id); ``manifest`` is the per-shard summary a write
     job sizes files with (:func:`write_training_shards` writes both).
-    Every internal boundary is a localCheckpoint, reclaimed by the
-    ContextCleaner when the frames drop — nothing to release."""
+    Both internal boundaries are eager localCheckpoints; the owner of
+    the unit of work frees them (checkpoint.persisted_by)."""
 
     kept: DataFrame
     packed: DataFrame

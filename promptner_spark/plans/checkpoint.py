@@ -15,9 +15,9 @@ marker exists; a partial run (data written, no marker) is re-executed.
 Per-partition metrics are collected DISTRIBUTED (mapPartitions-style
 count via ``spark_partition_id``) — no driver-side loops.
 
-:func:`materialize` is the in-memory boundary (an eager
-``localCheckpoint`` plus a release handle for its blocks), used where
-a plan branches several ways but nothing has to survive the session.
+:func:`persisted_by` is the one release rule for the in-memory
+boundaries (eager ``localCheckpoint``s): the owner of a unit of work
+frees every block its build persisted once the outputs are consumed.
 """
 
 from __future__ import annotations
@@ -31,13 +31,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 class CheckpointBlocks:
-    """Release handle for a localCheckpoint's persisted RDD blocks.
+    """Release handle for the RDD blocks a build persisted.
     ``DataFrame.unpersist`` only talks to the CacheManager and never
     touches a checkpoint's RDD storage, so without this the blocks
-    would linger until the ContextCleaner's next GC-driven sweep (the
-    registry's cache-hygiene test, tests/test_plan_shapes.py, caught
-    exactly that regression after the persist→checkpoint switch).
-    Call :meth:`unpersist` only once the checkpointed frame will not be
+    would linger until the ContextCleaner's next GC-driven sweep.
+    Call :meth:`unpersist` only once no frame of the build will be
     read again."""
 
     def __init__(self, jrdds: list):
@@ -49,45 +47,31 @@ class CheckpointBlocks:
                 jrdd.unpersist()
             except Exception:
                 pass   # session already stopped
+        self._jrdds = []
 
 
-def materialize(df: DataFrame, keep_partitioning: bool = False
-                ) -> tuple[DataFrame, CheckpointBlocks]:
-    """Eager in-memory boundary: ``df.localCheckpoint(eager=True)`` and
-    a handle that releases exactly the blocks it persisted.
+def persisted_by(spark: SparkSession, build: Callable
+                 ) -> tuple[object, CheckpointBlocks]:
+    """Run ``build()`` and return its result with a handle on every RDD
+    the session's ``getPersistentRDDs`` gained during the call — the
+    eager ``localCheckpoint`` boundaries of every operator it ran.
 
-    The eager fill is load-bearing, not warm-up: a boundary feeds
-    several downstream branches, and Spark schedules those branches as
-    concurrent stages — a LAZY cache lets each recompute the whole
-    upstream (inference-UDF) chain before any has filled it (measured:
-    the same query oscillating 7 s ↔ 69 s depending on which stage won
-    the race). A checkpoint rather than persist+count: every consumer,
-    including AQE's broadcast-build jobs, scans raw blocks (LogicalRDD)
-    against a truncated lineage instead of decompressing
-    InMemoryTableScan columnar batches per scan and resolving the full
-    lineage against the cache manager (measured on the curate and
-    linking boundaries: order-of-magnitude per-row scan cost).
-
-    ``keep_partitioning`` pins AQE off for the fill. Under AQE the
-    checkpoint captures UnknownPartitioning (AdaptiveSparkPlanExec is a
-    leaf whose outputPartitioning is unknown), so a hash layout the
-    caller built with an explicit ``repartition`` would be lost and
-    the next keyed aggregate would shuffle again. The boundary's own
-    plan is that fixed repartition — AQE has nothing to adapt there."""
-    spark = df.sparkSession
+    Only the owner of a unit of work calls this (a registry call, a
+    pipeline build); operators just checkpoint. If ``build`` raises,
+    whatever it persisted is released before the error propagates."""
     jsc = spark.sparkContext._jsc
-    before = {e.getKey() for e in jsc.getPersistentRDDs().entrySet()
-              .toArray()}
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    if keep_partitioning:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+
+    def gained() -> CheckpointBlocks:
+        return CheckpointBlocks(
+            [e.getValue() for e in jsc.getPersistentRDDs().entrySet()
+             .toArray() if e.getKey() not in before])
     try:
-        out = df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    return out, CheckpointBlocks(
-        [e.getValue() for e in jsc.getPersistentRDDs().entrySet()
-         .toArray() if e.getKey() not in before])
+        result = build()
+    except BaseException:
+        gained().unpersist()
+        raise
+    return result, gained()
 
 
 def _marker(root: str, stage: str) -> str:

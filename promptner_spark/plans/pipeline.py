@@ -19,11 +19,16 @@ are built on plans/checkpoint.py:
 
 - in memory (``build_pipeline``, ``streaming.incremental.
   batch_triple_counts``): every stage is lazy except ``mentions``,
-  which is url-hash repartitioned and materialized by
-  :func:`checkpoint.materialize`;
+  which is url-hash repartitioned and filled by an eager
+  ``localCheckpoint``;
 - parquet (``run_pipeline``): every stage is a resumable
   :func:`checkpoint.run_stage`, the big tables bucketed by url or
   subject hash, so a crashed run resumes at the first incomplete stage.
+
+:func:`_chain` wraps the whole build in :func:`checkpoint.persisted_by`,
+so :meth:`PipelineResult.unpersist` frees every block the build
+persisted: the mention boundary and linking's vocabulary and
+resolution checkpoints.
 """
 
 from __future__ import annotations
@@ -38,7 +43,7 @@ from ..operators.infer import extract_mentions
 from ..operators.verify import verify_types
 from ..sources.pages import pages_with_extracted_text
 from ..sources.sentences import split_sentences
-from .checkpoint import materialize, run_stage
+from .checkpoint import CheckpointBlocks, persisted_by, run_stage
 
 
 @dataclass
@@ -50,15 +55,15 @@ class PipelineResult:
     nodes: DataFrame
     triples: DataFrame
     triple_counts: DataFrame
-    cached: tuple = ()   # release handles of the in-memory boundaries
+    blocks: CheckpointBlocks | None = None   # what the build persisted
 
     def unpersist(self) -> None:
-        """Release the blocks the build materialized (the mention
-        boundary — kept even when ``with_verify`` re-derives
-        ``mentions`` from it). Loop callers (bench, notebooks) must
-        call this or checkpoint blocks accumulate."""
-        for handle in self.cached:
-            handle.unpersist()
+        """Release every block the build persisted (the mention
+        boundary and linking's checkpoints). Call it only once the
+        outputs are consumed; loop callers (bench, notebooks) must call
+        it or checkpoint blocks accumulate."""
+        if self.blocks is not None:
+            self.blocks.unpersist()
 
 
 # stage(name, build, bucket_on=None) -> DataFrame: the boundary policy.
@@ -84,7 +89,7 @@ class _InMemory:
     the UDF could emit anything), so without this the KG pair emission
     pays a corpus-wide (url, sent_id) exchange. HashPartitioning(url)
     on the materialized relation (kept through the checkpoint by
-    ``keep_partitioning``) satisfies the groupBy(url, sent_id)
+    filling it with AQE off) satisfies the groupBy(url, sent_id)
     clustering (subset rule), so the whole KG stage — final
     collect_set, pair Generate, name reattach — runs exchange-free off
     the boundary. The one mention-stream exchange this adds happens
@@ -93,19 +98,30 @@ class _InMemory:
     page key — per-key volume is one page's mentions, so no skew."""
 
     def __init__(self, spark: SparkSession, partitions: int | None = None):
+        self.conf = spark.conf
         self.n_parts = (partitions if partitions is not None
                         else spark.sparkContext.defaultParallelism)
-        self.handles: list = []
 
     def __call__(self, name: str, build: Callable[[], DataFrame],
                  bucket_on: str | None = None) -> DataFrame:
         if name != "mentions":
             return build()
-        df, handle = materialize(
-            build().repartition(self.n_parts, bucket_on),
-            keep_partitioning=True)
-        self.handles.append(handle)
-        return df
+        df = build().repartition(self.n_parts, bucket_on)
+        # Eager: the boundary feeds concurrent branch stages, and a lazy
+        # cache lets each recompute the upstream inference chain before
+        # any has filled it (measured: 7 s <-> 69 s on which stage won
+        # the race). A checkpoint, not persist+count: consumers scan raw
+        # blocks against a truncated lineage, not InMemoryTableScan
+        # batches (order-of-magnitude per-row cost, measured on the
+        # curate and linking boundaries). AQE is off for the fill: under
+        # AQE the checkpoint captures UnknownPartitioning
+        # (AdaptiveSparkPlanExec is a leaf), losing the url layout.
+        aqe_was = self.conf.get("spark.sql.adaptive.enabled")
+        self.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return df.localCheckpoint(eager=True)
+        finally:
+            self.conf.set("spark.sql.adaptive.enabled", aqe_was)
 
 
 def _parquet(spark: SparkSession, root: str, n_buckets: int) -> Stage:
@@ -125,7 +141,18 @@ def _parquet(spark: SparkSession, root: str, n_buckets: int) -> Stage:
     return stage
 
 
-def _chain(
+def _chain(spark: SparkSession, pages_source: Callable[[], DataFrame],
+           stage: Stage, **options) -> PipelineResult:
+    """The flagship stage graph, wired once; ``stage`` is the boundary
+    policy (:class:`_InMemory` or :func:`_parquet`). The result owns
+    every block the build persisted (:func:`checkpoint.persisted_by`)."""
+    res, blocks = persisted_by(
+        spark, lambda: _stages(spark, pages_source, stage, **options))
+    res.blocks = blocks
+    return res
+
+
+def _stages(
     spark: SparkSession,
     pages_source: Callable[[], DataFrame],
     stage: Stage,
@@ -139,8 +166,6 @@ def _chain(
     backend_factory=None,
     portable_fuzzy: bool = False,
 ) -> PipelineResult:
-    """The flagship stage graph, wired once; ``stage`` is the boundary
-    policy (:class:`_InMemory` or :func:`_parquet`)."""
     pages = stage("pages", pages_source)
     sentences = stage("sentences", lambda: split_sentences(pages))
     # backend_factory: () -> operators.model.Backend, constructed once
@@ -195,8 +220,7 @@ def _chain(
         canonical, name_dict=name_dict), bucket_on="subj")
     counts = stage("triple_counts", lambda: triples_op.triple_counts(trips))
     return PipelineResult(pages, sentences, mentions, linked, nodes,
-                          trips, counts,
-                          cached=tuple(getattr(stage, "handles", ())))
+                          trips, counts)
 
 
 def build_pipeline(

@@ -38,21 +38,19 @@ from ..operators.infer import extract_mentions
 from ..operators.model import GazetteerBackend, RetryingBackend
 from ..operators.verify import verify_types
 from ..sources.pages import DUCKDB_PAGES_CTE, synthesize_pages
-from .checkpoint import materialize
+from .checkpoint import CheckpointBlocks, persisted_by
 
 BIG_PRIME = 1_000_000_007
 
 # ---------------------------------------------------------- cache hygiene
-# The driver runs all 52 registry queries sequentially in ONE session.
-# Queries that persist intermediates must release them, but only AFTER
-# the driver has materialized the returned DataFrame — so releases are
-# DEFERRED: each query registers its caches here, and the next query's
-# entry (the _managed wrapper on every registry function) drains the
-# list. Nothing cached survives past the following query call, so a
-# 52-query session holds at most one query's caches at a time. Safe
-# for checkpoint blocks too (checkpoint.materialize's handle): the
-# driver materializes a query's result BEFORE calling the next query,
-# so released data is never read again.
+# The driver runs all 52 registry queries sequentially in ONE session,
+# and it consumes each query's result BEFORE calling the next one. The
+# _managed wrapper on every registry function owns the call: it runs
+# the query under checkpoint.persisted_by and keeps the handle on every
+# block the call persisted (the eager localCheckpoint boundaries of
+# the operators it ran), then releases it when the NEXT registry call
+# enters. So a 52-query session holds at most one query's blocks at a
+# time, and released blocks are never read again.
 #
 # Every call builds its plan afresh. The one DataFrame memo is
 # scans.cached_parquet, stamped with the files' mtime and size; Column
@@ -60,21 +58,12 @@ BIG_PRIME = 1_000_000_007
 # DataFrame must not be memoized: collecting it again reuses the
 # shuffle stages AQE already materialized, so it would serve the old
 # rows after the corpus is rewritten.
-_LIVE_CACHES: list[DataFrame] = []
+_pending = CheckpointBlocks([])   # the previous registry call's blocks
 
 
 def _release_pending() -> None:
-    """Unpersist every cache registered by the PREVIOUS query."""
-    while _LIVE_CACHES:
-        df = _LIVE_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass   # session already stopped — nothing to release
-
-
-def _defer_release(*dfs: DataFrame) -> None:
-    _LIVE_CACHES.extend(dfs)
+    """Free every block the PREVIOUS registry call persisted."""
+    _pending.unpersist()
 
 
 # span-F1 perturbed predictor: two misses (FN) + one type flip (FP+FN)
@@ -1732,7 +1721,6 @@ def _pipeline_triples(spark: SparkSession, sf_dir: str,
                       portable_fuzzy: bool) -> DataFrame:
     from .pipeline import build_pipeline
     res = build_pipeline(spark, sf_dir, portable_fuzzy=portable_fuzzy)
-    _defer_release(*res.cached)
     return res.triple_counts.select(
         "subj", "pred", "obj",
         F.col("n_sents").cast("long").alias("n_sents"),
@@ -2079,9 +2067,8 @@ def q_hot_surfaces(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain GROUP BY the oracle runs."""
     from ..operators.skew import hot_surface_counts
     # two agg branches (salted counts + composite-key distinct) read
-    # the mention stream — materialized like every multi-consumer
-    m, blocks = materialize(_oracle_mentions(spark, sf_dir))
-    _defer_release(blocks)
+    # the mention stream — checkpointed like every multi-consumer
+    m = _oracle_mentions(spark, sf_dir).localCheckpoint(eager=True)
     return hot_surface_counts(m, n_salts=8)
 
 
@@ -2598,12 +2585,14 @@ JOIN marg mb ON mb.entity_name = p.obj"""
 
 # ------------------------------------------------------------------ registry
 def _managed(fn):
-    """Registry wrapper: drain the previous query's deferred caches on
-    entry (see cache-hygiene note at the top of this module)."""
+    """Registry wrapper: free the previous call's blocks, hold this
+    call's (see the cache-hygiene note at the top of this module)."""
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        global _pending
         _release_pending()
-        return fn(spark, sf_dir)
+        out, _pending = persisted_by(spark, lambda: fn(spark, sf_dir))
+        return out
     return wrapped
 
 

@@ -82,8 +82,8 @@ _POINTER = "CURRENT"
 def batch_triple_counts(pages_batch: DataFrame) -> DataFrame:
     """The batch pipeline tail on one micro-batch of pages: the
     flagship stage graph (plans/pipeline.py) with the in-memory
-    boundary, its counts materialized before the boundary is
-    released."""
+    boundary. The counts are checkpointed, then every block the build
+    persisted (mentions, linking's two) is freed, drop after drop."""
     from ..plans.pipeline import _InMemory, _chain
 
     res = _chain(pages_batch.sparkSession, lambda: pages_batch,

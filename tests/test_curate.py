@@ -86,10 +86,10 @@ def test_exact_keeper_ignores_gate_failing_low_id(spark):
 def test_curate_plan_shape(spark, sf_dir):
     """Scale contract: no Python in the plan (signals are codegen),
     no cartesian product (near-dup candidates come from the bucketed
-    band equi-join), exactly one window (the md5 keeper). r6: the
-    shipped operator checkpoints the flags boundary, so the window
-    lives inside the materialized subplan — its presence is asserted
-    on the pure-DAG form (materialize=False), the runtime shape on
+    band equi-join), exactly one window (the md5 keeper). The flags
+    boundary is an eager checkpoint, so the window runs in its fill
+    job: the DAG is read from the SQL listener's executed plans of
+    that job plus the returned frame's plan, the runtime shape from
     the executed query."""
     from promptner_spark.operators.curate import curate_flags
     from promptner_spark.plans.queries import q_curate
@@ -98,11 +98,18 @@ def test_curate_plan_shape(spark, sf_dir):
         .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
-    dag = curate_flags(
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    out = curate_flags(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "lang", "text"),
-        materialize=False)._jdf.queryExecution() \
-        .executedPlan().toString()
+        .select("doc_id", "lang", "text"))
+    lst = store.executionsList()
+    fills = [lst.apply(i).physicalPlanDescription()
+             for i in range(lst.size())
+             if lst.apply(i).executionId() >= before]
+    assert fills   # the eager checkpoint ran at build time
+    dag = "\n".join(
+        fills + [out._jdf.queryExecution().executedPlan().toString()])
     assert dag.count("Window") >= 1
     assert "CartesianProduct" not in dag
     assert "BatchEvalPython" not in dag and "ArrowEval" not in dag

@@ -126,6 +126,25 @@ def test_run_pipeline_resumes_from_checkpoint(spark, sf_dir, tmp_path):
         root, "mentions", "_SUCCESS_STAGE")) == mentions_marker_mtime
 
 
+def test_unpersist_frees_every_block_the_build_persisted(spark, sf_dir):
+    """PipelineResult.unpersist frees the mention boundary AND
+    linking's vocabulary and resolution checkpoints: no RDD the build
+    persisted survives it (RDD ids, not a bare count, so a
+    ContextCleaner sweep of an earlier test's blocks cannot move the
+    baseline)."""
+    from promptner_spark.plans.pipeline import build_pipeline
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    before = persisted()
+    res = build_pipeline(spark, sf_dir)
+    assert persisted() - before   # the boundaries are live
+    res.unpersist()
+    assert persisted() - before == set()
+
+
 def test_three_wirings_give_identical_triple_counts(spark, sf_dir, tmp_path):
     """The flagship stage graph under each boundary policy: the
     in-memory build, the resumable parquet run and the streaming

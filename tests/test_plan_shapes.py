@@ -169,12 +169,19 @@ def test_predicate_triples_single_exchange(spark):
 
 def test_registry_queries_release_caches(spark, sf_dir):
     """Driver-session cache hygiene (r2 verdict #6): a registry query
-    may persist intermediates, but the NEXT registry call must release
-    them — no InMemoryRelation survives into the following query."""
+    may persist intermediates (its operators' eager localCheckpoints),
+    but the NEXT registry call must release every one of them. The
+    per-query checks compare RDD ids, not a bare count, so a
+    ContextCleaner sweep of an earlier test's blocks cannot move the
+    baseline."""
     from promptner_spark.plans.queries import QUERIES, _release_pending
 
     def n_cached():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
 
     _release_pending()
     base = n_cached()
@@ -184,6 +191,30 @@ def test_registry_queries_release_caches(spark, sf_dir):
     assert n_cached() == base
     _release_pending()  # idempotent
     assert n_cached() == base
+    for name in ("q_prep", "q_pagerank", "q_pipeline_triples"):
+        before = persisted()
+        QUERIES[name](spark, sf_dir).count()
+        assert persisted() - before, name   # its boundaries are live
+        QUERIES["q_pricing"](spark, sf_dir).count()
+        assert persisted() - before == set(), name
+
+
+def test_persisted_by_releases_a_failed_build(spark):
+    """A build that raises leaves none of the blocks it persisted."""
+    from promptner_spark.plans.checkpoint import persisted_by
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    def failing():
+        spark.range(3).localCheckpoint(eager=True)
+        raise RuntimeError("build failed")
+
+    before = persisted()
+    with pytest.raises(RuntimeError):
+        persisted_by(spark, failing)
+    assert persisted() - before == set()
 
 
 def test_resolution_nil_antijoin_is_broadcast(spark, sf_dir):
