@@ -23,8 +23,18 @@ Two-stage rule, engine-identical in Spark and DuckDB:
    ``und`` (too little evidence — hex dumps, word salad in no
    modeled language).
 
-All counts and comparisons are integers; the only doubles are never
-created. Bit-identical across engines by construction.
+All counts and comparisons are integers (the one division, by 3, is
+exact). Bit-identical across engines by construction.
+
+Where the staging lives: here, in :func:`with_lang_pred`, the one
+Spark form of the scorer. Every Spark caller (``q_langid``,
+``operators/curate.py::curate_flags``, the tests) goes through it,
+because the staging is what makes the plan compile: scores are
+projected as columns before the decision rule reads them, and an
+unstaged single expression outgrows whole-stage codegen's 64 KB
+method limit. :func:`spark_lang_score_expr` is the one Spark spelling
+of a score; the DuckDB mirror below (``sql_lang_score``,
+``sql_lang_id``) is the independent oracle spelling.
 
 Honest scope note: the synthetic sf corpus is English word-salad
 under rotated lang labels, so THIS scorer (correctly) reads nearly
@@ -37,7 +47,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # (language, ((trigram, weight), ...)) — order IS the tie-break.
 # Trigrams include word-boundary spaces (text is space-padded before
@@ -83,86 +93,17 @@ def _norm(text: Column) -> Column:
                     F.lit(" "))
 
 
-def _count_occurrences(s: Column, trigram: str) -> Column:
-    """Non-overlapping occurrence count of a 3-char literal: length
-    delta of replace-with-empty, divided by 3. Integer-exact."""
-    return ((F.length(s) - F.length(F.replace(s, F.lit(trigram))))
-            / F.lit(3)).cast("int")
-
-
-def lang_score(text_norm: Column, lang: str) -> Column:
-    """Weighted trigram hit count for one language profile (int)."""
-    profile = dict(TRIGRAM_PROFILES)[lang]
-    score = F.lit(0)
-    for trigram, weight in profile:
-        c = _count_occurrences(text_norm, trigram)
-        score = score + (c * F.lit(weight) if weight != 1 else c)
-    return score.cast("int")
-
-
-def han_char_count(text: Column) -> Column:
-    """Characters in the CJK-Unified-Ideographs block (the zh script
-    gate). Java regex class; the DuckDB mirror spells the same block
-    as an RE2 \\x{..} range."""
-    return F.length(F.regexp_replace(text, "[^一-鿿]", ""))
-
-
-def lang_pred(scores: dict[str, Column], n_norm: Column,
-              text: Column) -> Column:
-    """Decision rule over ALREADY-COMPUTED score columns: zh by
-    script gate, else first-wins argmax over the trigram profiles,
-    else und below the evidence floor. Taking columns (not
-    recomputing lang_score) keeps the codegen'd expression tree
-    linear — each score is evaluated once per row even though the
-    argmax fold references every score twice."""
-    best_score = F.lit(-1)
-    best_lang = F.lit("und")
-    for lang in LANGS:
-        s = scores[lang]
-        is_better = s > best_score          # strict: first-wins ties
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, s).otherwise(best_score)
-    evidence_ok = best_score * F.lit(MIN_CHARS_PER_HIT) >= n_norm
-    latin = F.when(evidence_ok, best_lang).otherwise(F.lit("und"))
-    # greatest(len, 1): an empty text must not satisfy 0 >= 0
-    return F.when(
-        han_char_count(text) * F.lit(HAN_DEN)
-        >= F.greatest(F.length(text), F.lit(1)) * F.lit(HAN_NUM),
-        F.lit("zh")
-    ).otherwise(latin)
-
-
-@lru_cache(maxsize=None)
-def lang_pred_named(n_norm: str = "n_norm", text: str = "text") -> Column:
-    """Memoized :func:`lang_pred` over the conventional projected
-    columns (``s_<lang>`` scores, ``n_norm``, raw ``text``) — the
-    decision-rule fold costs ~30 ms of py4j round trips to build, and
-    every bench run rebuilds its plans (see textstats memo note)."""
-    return lang_pred({lang: F.col(f"s_{lang}") for lang in LANGS},
-                     F.col(n_norm), F.col(text))
-
-
-def lang_id_trigram(text: Column) -> Column:
-    """Predicted language from a raw text column (self-contained
-    convenience form; plan-size-sensitive callers like q_langid
-    project norm + scores as columns first and use lang_pred)."""
-    norm = _norm(text)
-    return lang_pred({lang: lang_score(norm, lang) for lang in LANGS},
-                     F.greatest(F.length(norm), F.lit(1)), text)
-
-
 def spark_lang_score_expr(s_col: str, lang: str) -> str:
-    """:func:`lang_score` as a single Spark-SQL expression STRING for
-    ``F.expr`` — the hot-path spelling. The Column form makes ~7 py4j
-    round trips per trigram (~525 for the 5-profile score projection:
-    ~0.9 s of driver-side plan construction per q_langid build,
-    measured r5); one expr string per language cuts that to 5 calls
-    and Spark parses the terms JVM-side. Spark's ``/`` yields DOUBLE
-    and the INT cast truncates — term-for-term the Column form's
-    ``/ F.lit(3)`` + ``.cast("int")`` (the DuckDB mirror uses ``//``;
-    all three agree because the length delta is an exact multiple of
-    3). Parity pinned by tests/test_langid.py::
-    test_score_expr_matches_column."""
+    """Weighted trigram hit count (int) of one language profile over
+    the normalized column ``s_col``, as one Spark-SQL expression
+    string for ``F.expr``. Per trigram, the non-overlapping occurrence
+    count is the length delta of replace-with-empty, divided by 3.
+    One string per language costs one py4j call per score; the
+    Column-API spelling made ~7 round trips per trigram (~0.9 s of
+    driver-side plan construction per q_langid build, measured r5).
+    Spark's ``/`` yields DOUBLE and the INT cast truncates; the DuckDB
+    mirror uses ``//``. Both agree because the length delta is an
+    exact multiple of 3."""
     profile = dict(TRIGRAM_PROFILES)[lang]
     terms = []
     for trigram, weight in profile:
@@ -171,6 +112,61 @@ def spark_lang_score_expr(s_col: str, lang: str) -> str:
              f"length(replace({s_col}, '{lit}', ''))) / 3 AS INT)")
         terms.append(c if weight == 1 else f"{c} * {weight}")
     return "CAST(" + " + ".join(terms) + " AS INT)"
+
+
+@lru_cache(maxsize=None)
+def _pred() -> Column:
+    """Decision rule over the staged columns ``s_<lang>``, ``n_norm``
+    and the raw ``text``: zh by script gate, else first-wins argmax
+    over the trigram profiles, else und below the evidence floor.
+    Memoized: the fold costs ~30 ms of py4j round trips to build, and
+    every registry call rebuilds its plan (textstats memo note)."""
+    best_score = F.lit(-1)
+    best_lang = F.lit("und")
+    for lang in LANGS:
+        s = F.col(f"s_{lang}")
+        is_better = s > best_score          # strict: first-wins ties
+        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
+        best_score = F.when(is_better, s).otherwise(best_score)
+    evidence_ok = best_score * F.lit(MIN_CHARS_PER_HIT) >= F.col("n_norm")
+    latin = F.when(evidence_ok, best_lang).otherwise(F.lit("und"))
+    text = F.col("text")
+    # characters in the CJK-Unified-Ideographs block: a Java regex
+    # class here, an RE2 \x{..} range in the DuckDB mirror
+    han = F.length(F.regexp_replace(text, "[^一-鿿]", ""))
+    # greatest(len, 1): an empty text must not satisfy 0 >= 0
+    return F.when(
+        han * F.lit(HAN_DEN)
+        >= F.greatest(F.length(text), F.lit(1)) * F.lit(HAN_NUM),
+        F.lit("zh")
+    ).otherwise(latin)
+
+
+def with_lang_pred(df: DataFrame) -> DataFrame:
+    """``df``'s columns plus ``s_<lang>`` (int, one per profile, in
+    ``LANGS`` order) and ``pred`` (the predicted language), scored
+    from ``df.text``. ``df`` must not already carry ``norm``,
+    ``n_norm``, ``s_<lang>`` or ``pred``.
+
+    The one Spark form of the scorer, in three projections: ``norm``;
+    then ``n_norm`` and one score column per language; then the
+    decision rule. Each stage references the previous one's columns
+    many times, so the optimizer keeps them apart, and each score is
+    evaluated once per row as ONE column the argmax reads. Folded into
+    a single expression, the argmax re-expands all 75 trigram counts
+    and the generated code outgrows the JVM's 64 KB method limit:
+    whole-stage codegen falls back on every call (one row took ~14 s
+    warm on 4 cores) and raises when ``spark.sql.codegen.fallback`` is off."""
+    cols = df.columns
+    nrm = df.select(*cols, _norm(F.col("text")).alias("norm"))
+    scored = nrm.select(
+        *cols,
+        F.greatest(F.length("norm"), F.lit(1)).alias("n_norm"),
+        *[F.expr(spark_lang_score_expr("norm", lang)).alias(f"s_{lang}")
+          for lang in LANGS],
+    )
+    return scored.select(
+        *cols, *[f"s_{lang}" for lang in LANGS], _pred().alias("pred"))
 
 
 # ------------------------------------------------- DuckDB SQL mirror
@@ -218,8 +214,6 @@ def sql_lang_id(text_col: str, norm_alias: str) -> str:
 
 
 __all__ = [
-    "TRIGRAM_PROFILES", "LANGS", "MIN_CHARS_PER_HIT",
-    "lang_score", "lang_pred", "lang_id_trigram", "han_char_count",
-    "spark_lang_score_expr",
-    "sql_lang_score", "sql_lang_id", "_norm", "_sql_norm",
+    "TRIGRAM_PROFILES", "LANGS", "MIN_CHARS_PER_HIT", "with_lang_pred",
+    "sql_lang_score", "sql_lang_id", "_sql_norm",
 ]

@@ -136,7 +136,7 @@ def quality_score(text: Column) -> Column:
 def lang_id(text: Column) -> Column:
     """Cheapest-possible language gate: English stopword hit-rate
     (kept as the q_textstats feature for oracle stability). The
-    MODEL-BASED scorer is functions/langid.py::lang_id_trigram —
+    MODEL-BASED scorer is functions/langid.py::with_lang_pred —
     per-language character-trigram profiles as literal weights,
     in-row integer codegen, its own value-exact oracle (q_langid)."""
     return F.when(stopword_ratio(text) >= 0.05, F.lit("en")).otherwise(F.lit("und"))

@@ -17,8 +17,8 @@ adds on top of the ported surface (SURVEY.md §2.10), exercised as
 
 Scale shape (the 100 TB lens):
 - Signals and the gate are pure in-row codegen — zero shuffle, zero
-  Python (the language scores are single `F.expr` strings; see
-  functions/langid.py).
+  Python (the language scores come from
+  `functions/langid.py::with_lang_pred`).
 - Exact dedup is ONE window exchange hash-partitioned on md5(text) —
   the same key a real pipeline buckets its content store by.
 - Near-dup candidates come from the bucketed MinHash band equi-join
@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions import langid as L
+from ..functions.langid import with_lang_pred
 from ..functions.textstats import quality_score_named
 from .dedup import minhash_dedup_pairs
 
@@ -68,19 +68,10 @@ def curate_flags(
                      docs.
     ``is_kept``    — keeper with no verified lower-id near-dup.
     """
-    nrm = docs.select(
-        "doc_id", "lang", "text", L._norm(F.col("text")).alias("norm"))
-    s = nrm.select(
-        "doc_id", "lang", "text",
-        F.greatest(F.length("norm"), F.lit(1)).alias("n_norm"),
-        *[F.expr(L.spark_lang_score_expr("norm", lang)).alias(f"s_{lang}")
-          for lang in L.LANGS],
-    )
-    pred = L.lang_pred_named("n_norm", "text")
-    gated = s.select(
+    gated = with_lang_pred(docs.select("doc_id", "lang", "text")).select(
         "doc_id", "lang", "text",
         ((quality_score_named("text") >= F.lit(quality_min))
-         & (pred != F.lit("und"))).alias("pass_gate"),
+         & (F.col("pred") != F.lit("und"))).alias("pass_gate"),
     )
     # Exact-dedup keeper: ONE window exchange on md5(text). The min
     # is taken over gate-passing docs only (CASE-gated), so a failing

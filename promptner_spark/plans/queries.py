@@ -439,21 +439,10 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_langid.py are where discrimination is asserted."""
     from ..functions import langid as L
 
-    d = _docs_spread(spark, sf_dir)
-    # three projections so each trigram score is ONE column the
-    # decision rule references — not a re-expansion of the whole
-    # 75-trigram expression tree inside the argmax (halves the plan /
-    # task-binary size)
-    nrm = d.select("lang", "text", L._norm(F.col("text")).alias("norm"))
-    s = nrm.select(
-        F.col("lang").alias("label"), "text",
-        F.greatest(F.length("norm"), F.lit(1)).alias("n_norm"),
-        *[F.expr(L.spark_lang_score_expr("norm", lang)).alias(f"s_{lang}")
-          for lang in L.LANGS],
-    )
-    scored = s.select(
-        "label",
-        L.lang_pred_named("n_norm", "text").alias("pred"),
+    scored = L.with_lang_pred(
+        _docs_spread(spark, sf_dir).select("lang", "text")
+    ).select(
+        F.col("lang").alias("label"), "pred",
         *[f"s_{lang}" for lang in L.LANGS],
     )
     return scored.groupBy("label", "pred").agg(

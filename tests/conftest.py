@@ -10,6 +10,14 @@ if REPO_ROOT not in sys.path:
 REFERENCE_DIR = os.environ.get("PROMPTNER_REFERENCE_DIR", "/root/reference")
 TESTDATA_DIR = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
+# Tests that read the reference checkout (its code, samples or recorded
+# outputs) skip where it is absent; PROMPTNER_REFERENCE_DIR points them
+# at another copy.
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_DIR),
+    reason=f"reference checkout not found at {REFERENCE_DIR} "
+           "(set PROMPTNER_REFERENCE_DIR)")
+
 
 @pytest.fixture(scope="session")
 def spark():

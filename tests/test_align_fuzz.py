@@ -1,7 +1,8 @@
 """Differential fuzzing of the span-alignment core (SURVEY.md §5.2
 item 1): our ``align_spans``/``clean_answers``/``parse_exemplar_answers``
-run against the REFERENCE'S OWN functions imported from
-/root/reference (read-only), with its missing heavy deps (nltk,
+run against the REFERENCE'S OWN functions imported from the
+reference checkout (``conftest.REFERENCE_DIR``, read-only; the module
+skips where it is absent), with its missing heavy deps (nltk,
 openai, transformers) stubbed by equivalent shims. Property: for
 randomized paragraphs + mention lists — duplicates, ``'s``/``:``
 splits, absent mentions, dashed FewNERD types, overlapping surfaces —
@@ -15,6 +16,10 @@ import types
 
 import pytest
 from hypothesis import given, settings, strategies as st
+
+from .conftest import REFERENCE_DIR, needs_reference
+
+pytestmark = needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -53,12 +58,12 @@ def reference():
     sys.modules["nltk.corpus"] = corpus
     sys.modules["openai"] = openai
     sys.modules["transformers"] = transformers
-    sys.path.insert(0, "/root/reference")
+    sys.path.insert(0, REFERENCE_DIR)
     try:
         import algorithms  # noqa: F401  (reference module)
         yield algorithms
     finally:
-        sys.path.remove("/root/reference")
+        sys.path.remove(REFERENCE_DIR)
         for k, v in saved.items():
             if v is None:
                 sys.modules.pop(k, None)

@@ -49,3 +49,29 @@ def test_second_pipeline_build_compiles_nothing(spark, sf_dir):
             res.unpersist()
     runs = [_compiled_by(spark, build) for _ in range(2)]
     assert runs[1] == 0, runs
+
+
+def test_every_registry_query_compiles_without_fallback(spark, sf_dir):
+    """Whole-stage codegen falls back to interpreted evaluation
+    silently (a logged "Code grows beyond 64 KB" and a much slower
+    plan) while ``spark.sql.codegen.fallback`` is true. With it off,
+    such a fallback raises, so every registry query must run with it
+    off. A runtime SQL conf: set on the shared session, restored after."""
+    from promptner_spark.plans.queries import QUERIES
+
+    key = "spark.sql.codegen.fallback"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    failed = {}
+    try:
+        for name, query in QUERIES.items():
+            try:
+                query(spark, sf_dir).collect()
+            except Exception as exc:  # report every failing query
+                # the JVM trace's last "Caused by" names the root cause
+                causes = [ln.strip() for ln in str(exc).splitlines()
+                          if ln.strip().startswith("Caused by")]
+                failed[name] = (causes or [str(exc)])[-1][:300]
+    finally:
+        spark.conf.set(key, prior)
+    assert not failed, "\n".join(f"{n}: {m}" for n, m in failed.items())

@@ -1,5 +1,6 @@
-"""Char-trigram language ID (functions/langid.py): discrimination on
-crafted multilingual fixtures (the synthetic corpus is English
+"""Char-trigram language ID (functions/langid.py), all through
+``with_lang_pred`` — the one Spark form q_langid and curate_flags run:
+discrimination on crafted multilingual fixtures (the synthetic corpus is English
 word-salad under rotated labels, so it cannot reward a real scorer),
 engine parity of the arithmetic, the confusion-matrix evaluation
 path, and the shuffle-free plan contract."""
@@ -7,7 +8,6 @@ path, and the shuffle-free plan contract."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 # natural-language snippets, one per modeled language + the two
 # rejection classes (script gate, evidence floor)
@@ -31,33 +31,31 @@ FIXTURES = [
 
 
 def test_trigram_langid_discriminates_fixtures(spark):
-    from promptner_spark.functions.langid import lang_id_trigram
+    from promptner_spark.functions.langid import with_lang_pred
 
     df = spark.createDataFrame(
         [(lbl, txt) for lbl, txt in FIXTURES], ["label", "text"])
-    got = {r["label"]: r["pred"] for r in df.select(
-        "label", lang_id_trigram(F.col("text")).alias("pred")).collect()}
+    got = {r["label"]: r["pred"]
+           for r in with_lang_pred(df).select("label", "pred").collect()}
     for lbl, _ in FIXTURES:
         assert got[lbl] == lbl, (lbl, got)
 
 
 def test_langid_scores_match_python_replay(spark):
-    """The Spark arithmetic (length-delta replace counts, weighted
-    sum) must equal a direct Python count over the same normalized
-    text — pins the occurrence-count recipe both engines replay."""
+    """The helper's own score columns (length-delta replace counts,
+    weighted sum — the production spelling) must equal a direct Python
+    count over the same normalized text — pins the occurrence-count
+    recipe both engines replay."""
     import re
 
     from promptner_spark.functions.langid import (
-        LANGS, TRIGRAM_PROFILES, _norm, lang_score,
+        LANGS, TRIGRAM_PROFILES, with_lang_pred,
     )
 
     texts = [t for _, t in FIXTURES]
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    nrm = df.select("text", _norm(F.col("text")).alias("norm"))
-    rows = nrm.select(
-        "text",
-        *[lang_score(F.col("norm"), lang).alias(f"s_{lang}")
-          for lang in LANGS]).collect()
+    rows = with_lang_pred(df).collect()
+    assert len(rows) == len(texts)
     profiles = dict(TRIGRAM_PROFILES)
     for r in rows:
         norm = " " + re.sub(r"\s+", " ", r["text"].lower()) + " "
@@ -106,32 +104,7 @@ def test_langid_query_has_no_key_shuffle_before_cells(spark, sf_dir):
 
 @pytest.mark.parametrize("weird", ["", " ", "\n\t", "a", "…—¿"])
 def test_langid_degenerate_inputs(spark, weird):
-    from promptner_spark.functions.langid import lang_id_trigram
+    from promptner_spark.functions.langid import with_lang_pred
 
     df = spark.createDataFrame([(weird,)], ["text"])
-    pred = df.select(lang_id_trigram(F.col("text")).alias("p")) \
-        .collect()[0]["p"]
-    assert pred == "und"
-
-
-def test_score_expr_matches_column(spark, sf_dir):
-    """The F.expr spelling of lang_score (the hot-path form since r5 —
-    one py4j call per language instead of ~7 per trigram) must produce
-    exactly the Column-API score for every document and language."""
-    from promptner_spark.functions.langid import (
-        LANGS, _norm, lang_score, spark_lang_score_expr,
-    )
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select(_norm(F.col("text")).alias("norm"))
-    checks = [
-        (lang_score(F.col("norm"), lang)
-         == F.expr(spark_lang_score_expr("norm", lang))).alias(lang)
-        for lang in LANGS
-    ]
-    import functools
-    import operator
-    bad = d.select(*checks).where(
-        ~functools.reduce(operator.and_, [F.col(c) for c in LANGS])
-    ).count()
-    assert bad == 0
+    assert with_lang_pred(df).collect()[0]["pred"] == "und"

@@ -5,8 +5,15 @@ exemplar autogeneration (C4-C6), and the E1/E5/E6 evaluation helpers.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+
+from .conftest import REFERENCE_DIR, needs_reference
+
+GENIA_SAMPLE = os.path.join(REFERENCE_DIR, "data", "Genia",
+                            "sampletest1.iob2")
 
 
 # --------------------------------------------------------------- S2-S5
@@ -43,11 +50,11 @@ def test_decode_tagged_keeps_raw_b_label_for_tweetner(spark):
 
 
 # --------------------------------------------------------------- S1/S7
+@needs_reference
 def test_iob2_read_reference_sample_and_roundtrip(spark, tmp_path):
     from promptner_spark.sources.iob2_io import read_iob2, write_iob2
 
-    src = "/root/reference/data/Genia/sampletest1.iob2"
-    df = read_iob2(spark, src)
+    df = read_iob2(spark, GENIA_SAMPLE)
     n = df.count()
     assert n > 0
     # invariant from the reference loader: tag list aligns with tokens
@@ -178,6 +185,7 @@ def test_split_phrases(spark):
 
 
 # ------------------------------------------------------------- E2/E3 harness
+@needs_reference
 def test_evaluate_gold_on_reference_sample(spark):
     from promptner_spark.operators.model import GazetteerBackend, RetryingBackend
     from promptner_spark.plans.evaluate_gold import evaluate_gold_iob2
@@ -185,7 +193,7 @@ def test_evaluate_gold_on_reference_sample(spark):
     # gazetteer primed with two real Genia surfaces so TP > 0
     gaz = {"il-2": "protein", "nf-kappa b": "protein"}
     res = evaluate_gold_iob2(
-        spark, "/root/reference/data/Genia/sampletest1.iob2",
+        spark, GENIA_SAMPLE,
         backend_factory=lambda: RetryingBackend(GazetteerBackend(gaz)))
     micro = res.micro.collect()[0]
     n_gold = res.gold_spans.count()
