@@ -12,8 +12,8 @@ summary line — the north_rule's operational shape (``spark-submit
     python -m promptner_spark --warc '/data/crawl/*.warc.gz' \
         --checkpoint /tmp/kg_ckpt --buckets 256
 
-Every stage (pages → sentences → mentions → linked → nodes → triples
-→ triple_counts) is a checkpointed parquet table with per-partition
+Every stage (pages → sentences → mentions → aliases → resolution →
+linked → nodes → triples → triple_counts) is a checkpointed parquet table with per-partition
 lineage manifests (plans/checkpoint.py); re-running the same command
 after a crash re-executes only incomplete stages. On a cluster, omit
 --cores so the session respects the submitted master, and size
@@ -78,8 +78,8 @@ def main(argv: list[str] | None = None) -> dict:
         # per-stage write walls from the completion markers (no job)
         "stage_wall_ms": stage_walls_ms(
             args.checkpoint,
-            ["pages", "sentences", "mentions", "aliases", "linked",
-             "nodes", "triples", "triple_counts"]),
+            ["pages", "sentences", "mentions", "aliases", "resolution",
+             "linked", "nodes", "triples", "triple_counts"]),
     }
     # classes Spark compiled for this run and the time it took (the
     # JVM's counters, so a session reused across runs reports only

@@ -280,48 +280,25 @@ def _pmi_score(pairs: DataFrame, marg: DataFrame, total: int) -> DataFrame:
     )
 
 
-def inrow_pairs(ents: str) -> F.Column:
-    """sorted array column → array<struct<subj, obj>> of all (i < j)
-    pairs, generated in-row (the emit_triples trick,
-    operators/triples.py:120): no self-join, fanout bounded by the
-    array length the caller already capped.
-
-    NB: higher-order functions are CodegenFallback (interpreted per
-    row); hot paths use :func:`explode_pairs` — the same pair set via
-    two chained Generates, which whole-stage codegen compiles."""
-    col = F.col(ents)
-    n = F.size(col)
-    return F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice(col, i + 1, n - i),
-            (lambda ii: (lambda b: F.struct(
-                F.element_at(col, ii).alias("subj"),
-                b.alias("obj"))))(i),
-        ),
-    ))
-
-
 def explode_pairs(df: DataFrame, ents_col: str = "ents",
                   subj: str = "subj", obj: str = "obj",
                   carry: tuple[str, ...] = ()) -> DataFrame:
-    """All (i < j) pairs of a sorted-distinct array column, one output
-    row per pair — the SAME pair set ``explode(inrow_pairs(...))``
-    yields, but emitted by two chained ``explode``s (posexplode +
-    explode over a slice = GenerateExec, whole-stage codegen) instead
-    of the nested transform/flatten expression, which is
-    CodegenFallback and evaluated interpreted per row (r6: the
-    interpreted form was the dominant CPU of the pair-emitting graph
-    queries; same rewrite operators/triples.py::_emit_triples_keyed
-    documents). ``carry`` threads extra columns onto every pair row."""
-    n = F.size(F.col(ents_col))
-    s1 = df.where(n >= 2).select(
-        *[F.col(c) for c in carry], F.col(ents_col).alias("__ents"),
-        F.posexplode(F.col(ents_col)).alias("__i", subj))
+    """All (i < j) pairs of a distinct array column (by array
+    position), one output row per pair, emitted by two chained
+    ``explode``s (posexplode + explode over a slice = GenerateExec,
+    whole-stage codegen) instead of a nested transform/flatten
+    expression, which is CodegenFallback and evaluated interpreted per
+    row (r6: the interpreted form was the dominant CPU of the
+    pair-emitting graph queries and of the triple emission). A sorted
+    array gives pairs with ``subj < obj``. ``carry`` threads extra
+    columns onto every pair row."""
+    ents = F.col(ents_col)
+    s1 = df.where(F.size(ents) >= 2).select(
+        *[F.col(c) for c in carry], ents,
+        F.posexplode(ents).alias("__i", subj))
     return s1.select(
         *[F.col(c) for c in carry], F.col(subj),
-        F.explode(F.slice(F.col("__ents"), F.col("__i") + 2,
-                          F.size(F.col("__ents")))).alias(obj))
+        F.explode(F.slice(ents, F.col("__i") + 2, F.size(ents))).alias(obj))
 
 
 def pmi_edges_from_docsets(doc_sets: DataFrame, min_docs: int = 2,

@@ -71,26 +71,33 @@ def link_exact(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     ).drop("alias_norm_key")
 
 
-def link_exact_salted(mentions: DataFrame, aliases: DataFrame, salt: int = 16) -> DataFrame:
-    """J3: the same join without broadcast, skew-proofed by salting —
-    the strategy used when the dictionary exceeds broadcast memory.
-    Big side: salt = pmod(xxhash64(url, sent_id, begin), K); small
-    side exploded ×K so every (key, salt) bucket exists."""
+def _salted_join(mentions: DataFrame, table: DataFrame, table_key: str,
+                 salt: int) -> DataFrame:
+    """J3: left join of the mention stream onto a dictionary ``table``
+    by normalized surface == ``table[table_key]``, without broadcast,
+    skew-proofed by salting. Big side: salt = pmod(xxhash64(url,
+    sent_id, begin), K); small side exploded ×K so every (key, salt)
+    bucket exists."""
     salted_m = mentions.withColumn(
-        "alias_norm_key", norm_surface(F.col("surface"))
+        "_key", norm_surface(F.col("surface"))
     ).withColumn(
-        "salt",
-        F.pmod(F.xxhash64("url", "sent_id", "begin"), F.lit(salt)).cast("int"),
-    )
-    salted_a = aliases.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
+        "_salt",
+        F.pmod(F.xxhash64("url", "sent_id", "begin"), F.lit(salt)).cast("int"))
+    salted_t = table.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
     return salted_m.join(
-        salted_a,
-        (F.col("alias_norm_key") == salted_a["alias_norm"])
-        & (salted_m["salt"] == salted_a["salt"]),
+        salted_t,
+        (F.col("_key") == salted_t[table_key])
+        & (salted_m["_salt"] == salted_t["_salt"]),
         "left",
-    ).drop("alias_norm_key", "salt")
+    ).drop("_key", "_salt")
+
+
+def link_exact_salted(mentions: DataFrame, aliases: DataFrame, salt: int = 16) -> DataFrame:
+    """J3: the exact alias join without broadcast, skew-proofed by
+    salting (:func:`_salted_join`) — the strategy used when the
+    dictionary exceeds broadcast memory."""
+    return _salted_join(mentions, aliases, "alias_norm", salt)
 
 
 def link_fuzzy_candidates(
@@ -192,25 +199,15 @@ def fuzzy_surface_pairs(
 def _enrich_resolution(out: DataFrame) -> DataFrame:
     """Vocabulary-side canonicalization: every per-surface derivation
     the KG stages need — canonical ``entity_name``, the stable
-    ``entity_key`` (alias id, or the NIL hash-space id for unlinked
-    surfaces), and ``eid`` (xxhash64 of the name, the integer that
-    rides through the pair-emission shuffle instead of the name
-    string) — is computed HERE, on the O(vocab) dictionary, so the
-    broadcast join attaches them to the trillion-row mention stream
-    for free and the corpus-wide stages never evaluate a regexp or
-    md5 per mention (VERDICT r3: piggyback the int dictionary on the
-    resolution job instead of a second corpus agg)."""
-    from ..functions.hashing import portable_hash
-    from .triples import NIL_ID_OFFSET
+    ``entity_key`` and ``eid`` (triples.entity_columns) — is computed
+    HERE, on the O(vocab) dictionary, so the broadcast join attaches
+    them to the trillion-row mention stream for free and the
+    corpus-wide stages never evaluate a regexp or md5 per mention
+    (VERDICT r3: piggyback the int dictionary on the resolution job
+    instead of a second corpus agg)."""
+    from .triples import entity_columns
 
-    ename = F.coalesce(F.col("canonical_name"), F.col("m_norm"))
-    return out.select(
-        "*", ename.alias("entity_name"),
-        F.when(F.col("entity_id").isNotNull(), F.col("entity_id"))
-        .otherwise(NIL_ID_OFFSET
-                   + F.pmod(portable_hash(F.col("m_norm")),
-                            F.lit(NIL_ID_OFFSET))).alias("entity_key"),
-        F.xxhash64(ename).alias("eid"))
+    return out.select("*", *entity_columns(F.col("m_norm")))
 
 
 def build_resolution(mentions: DataFrame, aliases: DataFrame,
@@ -286,6 +283,19 @@ def build_resolution(mentions: DataFrame, aliases: DataFrame,
     return out.localCheckpoint(eager=True)
 
 
+def attach_resolution(mentions: DataFrame,
+                      resolution: DataFrame) -> DataFrame:
+    """The mention stream joined onto a resolution dictionary
+    (:func:`build_resolution`) by normalized surface: a broadcast-hash
+    left join, so the stream is scanned once and never shuffled. Adds
+    the dictionary's entity columns to every mention row."""
+    return mentions.withColumn(
+        "m_norm_key", norm_surface(F.col("surface"))).join(
+        F.broadcast(resolution),
+        F.col("m_norm_key") == resolution["m_norm"], "left",
+    ).drop("m_norm_key", "m_norm")
+
+
 def link_mentions(mentions: DataFrame, aliases: DataFrame,
                   fuzzy: bool = True,
                   max_broadcast_vocab: int | None = None,
@@ -293,45 +303,32 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame,
                   portable_fuzzy: bool = False) -> DataFrame:
     """Full linking: exact broadcast join with LSH fuzzy fallback.
     Output adds entity_id / canonical_name (nullable — NIL mentions
-    stay unlinked for canonicalization by co-reference).
+    stay unlinked) and the dictionary's entity_name / entity_key / eid.
 
     Architecture for the trillion-row stream: all per-surface work
     (normalization lookup, MinHash banding, Jaccard verify) happens on
     the DISTINCT surface vocabulary — orders of magnitude smaller than
     the mention stream (Zipf) — producing a resolution dictionary that
-    is broadcast back. The mention stream itself is scanned exactly
-    once and never shuffled; hub surfaces ("united states") cannot skew
-    anything because the join is broadcast-hash, not key-partitioned.
+    is broadcast back (:func:`attach_resolution`). The mention stream
+    itself is scanned exactly once and never shuffled; hub surfaces
+    ("united states") cannot skew anything because the join is
+    broadcast-hash, not key-partitioned.
 
     ``max_broadcast_vocab`` is the broadcast size guard: when set and
     the resolution dictionary exceeds that many rows, the forced
     broadcast (a driver/executor OOM at that point) degrades to the
-    salted shuffle join (dictionary exploded ×``salt``, mention side
-    salted on row identity) so a pathological vocabulary still links —
-    key histogram flattened exactly like :func:`link_exact_salted`.
-    ``None`` skips the (vocab-sized) count and always broadcasts."""
+    salted shuffle join (:func:`_salted_join`, dictionary exploded
+    ×``salt``) so a pathological vocabulary still links. ``None``
+    skips the (vocab-sized) count and always broadcasts."""
     resolution = build_resolution(mentions, aliases, fuzzy=fuzzy,
                                   portable_fuzzy=portable_fuzzy)
-    keyed = mentions.withColumn("m_norm_key", norm_surface(F.col("surface")))
     if max_broadcast_vocab is not None and \
             resolution.count() > max_broadcast_vocab:
-        salted_m = keyed.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64("url", "sent_id", "begin"),
-                   F.lit(salt)).cast("int"))
-        salted_r = resolution.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        out = salted_m.join(
-            salted_r,
-            (F.col("m_norm_key") == salted_r["m_norm"])
-            & (salted_m["_salt"] == salted_r["_salt"]), "left",
-        ).drop("m_norm_key", "m_norm", "_salt")
+        out = _salted_join(mentions, resolution, "m_norm", salt) \
+            .drop("m_norm")
     else:
-        out = keyed.join(
-            F.broadcast(resolution),
-            F.col("m_norm_key") == resolution["m_norm"], "left",
-        ).drop("m_norm_key", "m_norm")
-    # The (checkpointed, vocab-sized) dictionary handle: emit_triples
-    # derives its eid→name broadcast from it without a corpus pass.
+        out = attach_resolution(mentions, resolution)
+    # Read only by perfbench/workloads.py's traced path; it goes when
+    # that path calls the pipeline's own stages.
     out._promptner_resolution = resolution  # type: ignore[attr-defined]
     return out

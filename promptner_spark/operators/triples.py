@@ -6,46 +6,69 @@ relation extractor, so the north-rule triple emission is co-occurrence
 based):
 
 - **nodes**: one canonical entity per linked cluster. Linked mentions
-  carry their alias ``entity_id``; NIL mentions are canonicalized by
-  connected components over the "same normalized surface" relation
-  (G2), giving surface-cluster ids offset into a disjoint id space.
+  carry their alias ``entity_id``; NIL mentions get an id from their
+  normalized surface in a disjoint hash space, and with NIL merging
+  near-duplicate NIL surfaces first collapse to one representative by
+  connected components (G2, :func:`merge_nil_surfaces`).
 - **edges/triples**: within each sentence, every unordered pair of
   distinct canonical entities co-occurring emits
   ``(subj, 'cooccurs_with', obj)`` with ``subj < obj`` (canonical-name
   order) — plus provenance (url, sent_id).
 
-Scale: pair generation is a per-sentence self-join on (url, sent_id).
-Sentences hold O(10) mentions so fanout is bounded; the join key is
-fine-grained (url × sent) — no hub-key blowup. Triple dedup/counting
-shuffles once on (subj, pred, obj).
+Scale: pair generation is in-row — one ``groupBy(url, sent_id)``
+gathers each sentence's distinct entities and
+graph_analytics.explode_pairs emits the (i < j) pairs. Sentences hold
+O(10) mentions so fanout is bounded; the group key is fine-grained
+(url × sent) — no hub-key blowup. Triple counting shuffles once on
+(subj, pred, obj).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 PRED_COOCCUR = "cooccurs_with"
 NIL_ID_OFFSET = 1_000_000_000
 
 
-def nil_components(linked: DataFrame, min_jaccard: float = 0.5,
+def entity_columns(nil_surface: Column) -> list[Column]:
+    """The canonical entity of a row carrying (entity_id,
+    canonical_name): ``entity_name`` (the alias name, else
+    ``nil_surface``), ``entity_key`` (the alias id, else the NIL
+    hash-space id of ``nil_surface``) and ``eid`` (xxhash64 of the
+    name, the integer the keyed pair emission shuffles). The one
+    definition of the NIL key: the resolution dictionary applies it
+    per vocabulary row, :func:`canonicalize` per mention row."""
+    from ..functions.hashing import portable_hash
+
+    ename = F.coalesce(F.col("canonical_name"), nil_surface)
+    return [
+        ename.alias("entity_name"),
+        F.when(F.col("entity_id").isNotNull(), F.col("entity_id"))
+        .otherwise(NIL_ID_OFFSET
+                   + F.pmod(portable_hash(nil_surface),
+                            F.lit(NIL_ID_OFFSET))).alias("entity_key"),
+        F.xxhash64(ename).alias("eid"),
+    ]
+
+
+def nil_components(nil_vocab: DataFrame, min_jaccard: float = 0.5,
                    shingle_k: int = 3,
                    portable: bool = False) -> DataFrame:
     """Cross-surface NIL co-reference (north_star "connected-components
     canonicalization over the mention co-reference graph"): cluster
-    the NIL surface VOCABULARY by char-shingle similarity and map each
-    surface to its component representative (the component's minimum
-    surface — stable across cluster sizes).
+    the NIL surface VOCABULARY — ``nil_vocab``, one row per distinct
+    normalized surface ``m_norm`` — by char-shingle similarity and map
+    each surface to its component representative (the component's
+    minimum surface — stable across cluster sizes).
 
-    Output: (m_norm, canonical_rep), one row per distinct NIL surface;
-    vocabulary-sized, so callers broadcast it back onto the mention
-    stream. Surfaces with no near-duplicate keep themselves."""
+    Output: (m_norm, canonical_rep), one row per input surface;
+    vocabulary-sized, so callers broadcast it. Surfaces with no
+    near-duplicate keep themselves."""
     from .components import connected_components
-    from .linking import fuzzy_surface_pairs, norm_surface
+    from .linking import fuzzy_surface_pairs
 
-    nil_vocab = (linked.where(F.col("entity_id").isNull())
-                 .select(norm_surface(F.col("surface")).alias("m_norm"))
-                 .distinct())
+    nil_vocab = nil_vocab.select("m_norm")
     pairs = fuzzy_surface_pairs(nil_vocab, col="m_norm",
                                 shingle_k=shingle_k,
                                 min_jaccard=min_jaccard,
@@ -61,49 +84,35 @@ def nil_components(linked: DataFrame, min_jaccard: float = 0.5,
     )
 
 
-def canonicalize(linked: DataFrame, nil_merge: bool = False,
-                 min_jaccard: float = 0.5) -> DataFrame:
-    """linked mention table → + canonical (entity_key, entity_name).
+def merge_nil_surfaces(resolution: DataFrame) -> DataFrame:
+    """NIL merging on the resolution dictionary
+    (linking.build_resolution): its NIL rows (``entity_id`` NULL) are
+    clustered by :func:`nil_components`, and every row's
+    :func:`entity_columns` are recomputed from its representative, so
+    near-duplicate NIL surfaces share one entity. All of it is
+    O(vocab); the mention stream only meets the result through the
+    usual broadcast join."""
+    reps = nil_components(resolution.where(F.col("entity_id").isNull()))
+    base = resolution.drop("entity_name", "entity_key", "eid")
+    return base.join(F.broadcast(reps), "m_norm", "left").select(
+        *base.columns,
+        *entity_columns(F.coalesce(F.col("canonical_rep"), F.col("m_norm"))))
 
-    Linked mentions use their alias entity. NIL mentions get a
-    deterministic id from the normalized surface hash-space (same
-    surface ⇒ same id); with ``nil_merge`` near-duplicate NIL surfaces
-    are first merged by :func:`nil_components` (broadcast of the
-    vocabulary-sized representative map — the mention stream still
-    never shuffles).
+
+def canonicalize(linked: DataFrame) -> DataFrame:
+    """linked mention table → + canonical (entity_name, entity_key,
+    eid), by :func:`entity_columns` over the normalized surface.
 
     When the input already carries (entity_key, entity_name) — the
-    linking dictionary precomputed them vocabulary-side
-    (linking._enrich_resolution) — this is a no-op: the corpus-wide
-    stream pays zero per-row regexp/hash work here."""
-    from ..functions.hashing import portable_hash
+    linking dictionary precomputed them vocabulary-side — this is a
+    no-op: the corpus-wide stream pays zero per-row regexp/hash work
+    here."""
     from .linking import norm_surface
 
-    if not nil_merge and {"entity_key", "entity_name"} <= set(linked.columns):
+    if {"entity_key", "entity_name"} <= set(linked.columns):
         return linked
-    # nil_merge rewrites NIL names/keys, so any precomputed columns
-    # (and the eid derived from the un-merged name) are stale.
-    linked = linked.drop("entity_key", "entity_name", "eid")
-    nrm = norm_surface(F.col("surface"))
-    if nil_merge:
-        reps = nil_components(linked, min_jaccard=min_jaccard)
-        linked = linked.withColumn("__nrm", nrm).join(
-            F.broadcast(reps.withColumnRenamed("m_norm", "__nrm")),
-            "__nrm", "left")
-        canon_surface = F.coalesce(F.col("canonical_rep"), F.col("__nrm"))
-    else:
-        canon_surface = nrm
-    out = linked.withColumn(
-        "entity_key",
-        F.when(F.col("entity_id").isNotNull(), F.col("entity_id"))
-        .otherwise(NIL_ID_OFFSET
-                   + F.pmod(portable_hash(canon_surface),
-                            F.lit(NIL_ID_OFFSET))),
-    ).withColumn(
-        "entity_name",
-        F.coalesce(F.col("canonical_name"), canon_surface),
-    )
-    return out.drop("__nrm", "canonical_rep") if nil_merge else out
+    return linked.select(
+        "*", *entity_columns(norm_surface(F.col("surface"))))
 
 
 def nodes_table(canonical: DataFrame) -> DataFrame:
@@ -122,10 +131,12 @@ def emit_triples(canonical: DataFrame,
 
     ONE shuffle: ``groupBy(url, sent_id).collect_set`` gathers the
     distinct entities per sentence, and the (i < j) pairs are
-    generated in-row from the sorted set (nested transform + flatten)
-    — no distinct pass and no self-join. Fanout is bounded by
-    per-sentence entity count (O(10)), so the generated array never
-    blows a row; at web scale this halves the exchanges of the
+    generated from the set by graph_analytics.explode_pairs (two
+    chained Generates, whole-stage codegen'd — a nested
+    transform/flatten is CodegenFallback, interpreted per row, and was
+    the KG reduce stage's CPU hog, r6) — no distinct pass and no
+    self-join. Fanout is bounded by per-sentence entity count (O(10)),
+    so no row blows up; at web scale this halves the exchanges of the
     equivalent distinct+self-join plan and cannot skew (the key is the
     fine-grained sentence, never the entity).
 
@@ -141,17 +152,12 @@ def emit_triples(canonical: DataFrame,
     which is what the memory-bandwidth-bound reduce stage scales
     with. Without ``name_dict`` (or when ``eid`` is absent) the
     string plan runs — the DuckDB-oracle-replayable form."""
+    from .graph_analytics import explode_pairs
+
     if name_dict is not None and "eid" in canonical.columns:
         return _emit_triples_keyed(canonical, name_dict)
-    from .graph_analytics import explode_pairs
     sets = canonical.groupBy("url", "sent_id").agg(
         F.sort_array(F.collect_set("entity_name")).alias("ents"))
-    # pair emission via two chained Generates (explode_pairs) rather
-    # than the nested transform/flatten expression: identical pair
-    # set, but GenerateExec is whole-stage-codegen'd while
-    # higher-order functions are CodegenFallback — interpreted per
-    # row, and this was the KG reduce stage's CPU hog (r6; same
-    # rationale as _emit_triples_keyed's docstring).
     return (
         explode_pairs(
             sets.select("url",
@@ -170,33 +176,23 @@ def emit_triples(canonical: DataFrame,
 def _emit_triples_keyed(canonical: DataFrame,
                         name_dict: DataFrame) -> DataFrame:
     """Long-keyed pair emission (see :func:`emit_triples`): distinct
-    eids per sentence through the exchange, unordered (i < j by eid)
-    pairs in-row, names reattached post-explode by broadcast and the
-    subj < obj (by name) orientation applied last. eid↔name is a
-    bijection up to a 64-bit hash collision within the entity
-    vocabulary — negligible at any real vocabulary size and absent at
-    test scale (the parity test asserts exact equality with the
-    string plan).
+    eids per sentence through the exchange, unordered (i < j by array
+    position) pairs from explode_pairs, names reattached post-explode
+    by broadcast and the subj < obj (by name) orientation applied
+    last. eid↔name is a bijection up to a 64-bit hash collision within
+    the entity vocabulary — negligible at any real vocabulary size and
+    absent at test scale (the parity test asserts exact equality with
+    the string plan). No ``sort_array``: the pair set is
+    order-independent and the orientation is applied by name at the
+    end."""
+    from .graph_analytics import explode_pairs
 
-    Unlike the string plan's nested transform/flatten (higher-order
-    functions are CodegenFallback — interpreted per row, measured as
-    the KG reduce stage's CPU hog), the pairs here come from two
-    chained ``explode``s (GenerateExec, whole-stage codegen): element
-    i paired with every element after it via ``slice``. No
-    ``sort_array`` either — the pair set is order-independent and the
-    subj/obj orientation is applied by name at the end."""
     sets = canonical.groupBy("url", "sent_id").agg(
         F.collect_set("eid").alias("ents"))
-    s1 = (
-        sets.where(F.size("ents") >= 2)
-        .select("url", F.col("sent_id").cast("int").alias("sent_id"),
-                "ents", F.posexplode("ents").alias("i", "ea"))
-    )
-    exploded = s1.select(
-        "url", "sent_id", "ea",
-        F.explode(F.slice("ents", F.col("i") + 2, F.size("ents")))
-        .alias("eb"),
-    )
+    exploded = explode_pairs(
+        sets.select("url", F.col("sent_id").cast("int").alias("sent_id"),
+                    "ents"),
+        "ents", "ea", "eb", carry=("url", "sent_id"))
     d = name_dict.select(F.col("eid").alias("_k"),
                          F.col("entity_name").alias("_n"))
     na = exploded.join(F.broadcast(d), F.col("ea") == F.col("_k")) \

@@ -8,8 +8,11 @@ once as named stages:
                    (one mapInPandas pass, operators/infer.py)
                    [optional] type verification (SP3)
     aliases        the alias table
-    linked         entity linking (broadcast alias join + LSH fuzzy)
-                   → canonicalization (alias ids + NIL surface components)
+    resolution     the surface-vocabulary dictionary: exact alias join,
+                   LSH fuzzy fallback, NIL rows; canonical entity_name /
+                   entity_key / eid per surface ([optional] NIL merge by
+                   connected components)
+    linked         mentions broadcast-joined onto ``resolution``
     nodes
     triples        co-occurrence triples
     triple_counts
@@ -27,8 +30,8 @@ are built on plans/checkpoint.py:
 
 :func:`_chain` wraps the whole build in :func:`checkpoint.persisted_by`,
 so :meth:`PipelineResult.unpersist` frees every block the build
-persisted: the mention boundary and linking's vocabulary and
-resolution checkpoints.
+persisted: the mention boundary and the resolution stage's vocabulary
+and dictionary checkpoints.
 """
 
 from __future__ import annotations
@@ -196,28 +199,30 @@ def _stages(
     # policy (north_star graph tables: nodes, edges, aliases)
     aliases = stage("aliases",
                     lambda: linking.alias_df(spark, vocab_scale=vocab_scale))
-    # portable_fuzzy: md5-family LSH bands in the fuzzy fallback so a
-    # DuckDB oracle can replay the banding exactly (q_pipeline_triples'
-    # value-exact check); an O(vocab) config knob, default off.
-    linked = stage("linked", lambda: linking.link_mentions(
-        mentions, aliases, fuzzy=fuzzy_link, portable_fuzzy=portable_fuzzy),
-        bucket_on="url")
-    canonical = triples_op.canonicalize(linked, nil_merge=nil_merge)
-    nodes = stage("nodes", lambda: triples_op.nodes_table(canonical))
+    # The resolution dictionary: one row per distinct normalized
+    # surface with its entity (exact alias, else LSH fuzzy, else NIL)
+    # and the precomputed entity_name / entity_key / eid. portable_fuzzy:
+    # md5-family LSH bands in the fuzzy fallback so a DuckDB oracle can
+    # replay the banding exactly (q_pipeline_triples' value-exact
+    # check); an O(vocab) config knob, default off. nil_merge clusters
+    # the dictionary's NIL rows, so it stays O(vocab) too.
+    def resolve():
+        res = linking.build_resolution(mentions, aliases, fuzzy=fuzzy_link,
+                                       portable_fuzzy=portable_fuzzy)
+        return triples_op.merge_nil_surfaces(res) if nil_merge else res
+    resolution = stage("resolution", resolve)
+    linked = stage("linked", lambda: linking.attach_resolution(
+        mentions, resolution), bucket_on="url")
+    nodes = stage("nodes", lambda: triples_op.nodes_table(linked))
     # eid→name dictionary for the narrow-shuffle pair emission: a
-    # vocabulary-sized distinct over the (materialized) resolution
-    # dictionary — no corpus pass. Only a lazy ``linked`` still holds
-    # it; a stage read back from parquet runs the string plan. nil_merge
-    # rewrites names, so the precomputed eids are stale there and the
-    # string plan runs too.
-    resolution = getattr(linked, "_promptner_resolution", None)
-    name_dict = (resolution.select("eid", "entity_name").distinct()
-                 if resolution is not None and not nil_merge else None)
+    # vocabulary-sized distinct over the resolution stage — no corpus
+    # pass.
+    name_dict = resolution.select("eid", "entity_name").distinct()
     # triples bucket on the SUBJECT hash — downstream per-entity reads
     # (edge listing, degree counts) prune to one bucket instead of
     # scanning the corpus-wide edge table.
     trips = stage("triples", lambda: triples_op.emit_triples(
-        canonical, name_dict=name_dict), bucket_on="subj")
+        linked, name_dict=name_dict), bucket_on="subj")
     counts = stage("triple_counts", lambda: triples_op.triple_counts(trips))
     return PipelineResult(pages, sentences, mentions, linked, nodes,
                           trips, counts)
@@ -240,9 +245,9 @@ def build_pipeline(
     """The pipeline DAG with the in-memory boundary (one materialized
     mention stage, everything else lazy). ``resolve_disputes`` (with
     ``with_verify``) enables the C8 third-query resolution in the
-    fused verification pass; ``nil_merge`` additionally merges
-    near-duplicate NIL surfaces by connected components before
-    canonicalization (operators/triples.py::nil_components).
+    fused verification pass; ``nil_merge`` additionally merges the
+    resolution dictionary's near-duplicate NIL surfaces by connected
+    components (operators/triples.py::merge_nil_surfaces).
 
     The mention stage is filled by one eager job at build time; call
     :meth:`PipelineResult.unpersist` once the outputs are consumed.
@@ -284,7 +289,8 @@ def run_pipeline(
       n_buckets)`` — url-hash bucketing, so a resume, a backfill of
       one bucket, or a per-bucket consumer touches 1/n of the files;
     - ``triples``: bucketed on the SUBJECT hash.
-    Nodes and aliases stay unpartitioned (vocabulary-sized).
+    Nodes, aliases and the resolution dictionary stay unpartitioned
+    (vocabulary-sized).
 
     ``pages_source``: alternative corpus reader returning the pages
     shape (url, warc_ts, lang, text, ...) — e.g. sources.warc::

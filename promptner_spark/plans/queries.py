@@ -1774,7 +1774,7 @@ def _sql_pipeline_triples(sent_tokens: int = 25) -> str:
       portable_fuzzy) with true-Jaccard ≥ 0.5 verify. Every alias of
       every entity that shares a band is scored, and the pick is
       jaccard DESC, then entity_id ASC; NIL surfaces canonicalize to
-      their normalized surface (operators/triples.py::canonicalize).
+      their normalized surface (operators/triples.py::entity_columns).
     - ``pairs``: triples.py::emit_triples / triple_counts — distinct
       canonical names per sentence, unordered pairs subj < obj,
       n_sents = co-occurring sentence count, n_docs = distinct urls.
@@ -2083,10 +2083,9 @@ def q_nil_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.col("text"), " ")).alias("t")).distinct()
     vocab = toks.select("t").unionByName(
         toks.select(F.concat(F.col("t"), F.lit("s")).alias("t"))).distinct()
-    fake_linked = vocab.select(
-        F.col("t").alias("surface"),
-        F.lit(None).cast("long").alias("entity_id"))
-    reps = triples_op.nil_components(fake_linked, min_jaccard=0.5,
+    nil_vocab = vocab.select(
+        linking.norm_surface(F.col("t")).alias("m_norm")).distinct()
+    reps = triples_op.nil_components(nil_vocab, min_jaccard=0.5,
                                      shingle_k=3, portable=True)
     return reps.select(F.col("m_norm").alias("surface"), "canonical_rep")
 

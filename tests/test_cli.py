@@ -48,6 +48,7 @@ def test_cli_parquet_run_and_resume(spark, sf_dir, tmp_path):
     for s in (s1, s2):
         walls = s["stage_wall_ms"]
         assert set(s["stages"]) <= set(walls)
+        assert {"aliases", "resolution", "linked"} <= set(walls)
         assert all(isinstance(v, int) and v >= 0 for v in walls.values())
     assert s2["stage_wall_ms"] == s1["stage_wall_ms"]
 

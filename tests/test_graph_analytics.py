@@ -124,36 +124,45 @@ def test_pagerank_independent_of_partitioning(spark):
 
 
 def test_nil_components_merges_near_duplicate_surfaces(spark):
-    """North-star NIL canonicalization: near-duplicate NIL surfaces
-    collapse to one representative; linked mentions are untouched."""
-    from promptner_spark.operators.triples import canonicalize, nil_components
+    """North-star NIL canonicalization on the resolution dictionary:
+    near-duplicate NIL surfaces collapse to one representative; linked
+    surfaces are untouched."""
+    from promptner_spark import schema
+    from promptner_spark.operators.linking import build_resolution
+    from promptner_spark.operators.triples import (
+        merge_nil_surfaces, nil_components,
+    )
 
-    linked = spark.createDataFrame(
-        [("kafka", None, None),        # NIL cluster {kafka, kafkas}
-         ("kafkas", None, None),
-         ("zookeeper", None, None),    # NIL singleton
-         ("spark", 1, "Apache Spark")],
-        "surface string, entity_id long, canonical_name string")
+    mentions = spark.createDataFrame(
+        [("kafka",),        # NIL cluster {kafka, kafkas}
+         ("kafkas",),
+         ("zookeeper",),    # NIL singleton
+         ("spark",)],
+        "surface string")
+    aliases = spark.createDataFrame([("spark", 1, "Apache Spark", 0.9)],
+                                    schema.ALIASES)
+    resolution = build_resolution(mentions, aliases, fuzzy=False)
 
     reps = {r["m_norm"]: r["canonical_rep"]
-            for r in nil_components(linked).collect()}
+            for r in nil_components(
+                resolution.where("entity_id IS NULL")).collect()}
     assert reps == {"kafka": "kafka", "kafkas": "kafka",
                     "zookeeper": "zookeeper"}
 
-    canon = canonicalize(linked, nil_merge=True).collect()
-    by_surface = {r["surface"]: r for r in canon}
+    by_surface = {r["m_norm"]: r
+                  for r in merge_nil_surfaces(resolution).collect()}
     # both kafka variants share ONE canonical entity (key and name)
     assert (by_surface["kafka"]["entity_key"]
             == by_surface["kafkas"]["entity_key"])
     assert (by_surface["kafka"]["entity_name"]
             == by_surface["kafkas"]["entity_name"] == "kafka")
-    # singleton keeps itself, linked mention keeps its alias entity
+    # singleton keeps itself, linked surface keeps its alias entity
     assert by_surface["zookeeper"]["entity_name"] == "zookeeper"
     assert by_surface["spark"]["entity_name"] == "Apache Spark"
     assert by_surface["spark"]["entity_key"] == 1
-    # nil_merge=False leaves the variants distinct (regression guard)
-    plain = {r["surface"]: r["entity_name"]
-             for r in canonicalize(linked).collect()}
+    # the unmerged dictionary leaves the variants distinct (regression
+    # guard)
+    plain = {r["m_norm"]: r["entity_name"] for r in resolution.collect()}
     assert plain["kafkas"] == "kafkas" != plain["kafka"]
 
 

@@ -86,9 +86,8 @@ def test_emit_triples_keyed_equals_string_plan(spark, sf_dir):
     sentences = split_sentences(pages_with_extracted_text(spark, sf_dir))
     mentions = extract_mentions(sentences).persist()
     mentions.count()
-    linked = linking.link_mentions(mentions, linking.alias_df(spark))
-    resolution = linked._promptner_resolution
-    canonical = triples_op.canonicalize(linked)
+    resolution = linking.build_resolution(mentions, linking.alias_df(spark))
+    canonical = linking.attach_resolution(mentions, resolution)
     assert "eid" in canonical.columns   # vocab-side precompute arrived
     name_dict = resolution.select("eid", "entity_name").distinct()
     keyed = triples_op.emit_triples(canonical, name_dict=name_dict)
@@ -165,6 +164,34 @@ def test_three_wirings_give_identical_triple_counts(spark, sf_dir, tmp_path):
     assert in_memory == parquet
     assert in_memory == batch
     assert len(in_memory) == 77   # sf0.001
+
+
+def test_nil_merge_through_the_pipeline(spark, sf_dir):
+    """build_pipeline(nil_merge=True) end to end: a gazetteer that also
+    tags two near-duplicate phrases of the sf0.001 text that no alias
+    covers ("group agg", "group a") makes two NIL surfaces the
+    resolution dictionary merges into one entity. The counts are the
+    ones the per-row merge over the mention stream gave (102 unmerged,
+    90 merged)."""
+    from promptner_spark.operators.gazetteer import GAZETTEER
+    from promptner_spark.operators.model import GazetteerBackend
+    from promptner_spark.plans.pipeline import build_pipeline
+
+    gaz = {**GAZETTEER, "group agg": "OP", "group a": "OP"}
+
+    def factory():
+        return GazetteerBackend(gaz)
+
+    got = {}
+    for nil_merge in (False, True):
+        res = build_pipeline(spark, sf_dir, backend_factory=factory,
+                             nil_merge=nil_merge)
+        names = {r["entity_name"] for r in res.nodes.collect()}
+        got[nil_merge] = (res.triple_counts.count(),
+                          names & {"group agg", "group a"})
+        res.unpersist()
+    assert got[False] == (102, {"group agg", "group a"})
+    assert got[True] == (90, {"group a"})
 
 
 def test_manifest_records_partition_metrics(spark, sf_dir, tmp_path):

@@ -18,6 +18,19 @@ def _plan(df, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(jmode)
 
 
+def _executed_plans(spark, run) -> list[str]:
+    """Physical plans of every SQL execution ``run()`` starts, from the
+    SQL status store (for work a stage boundary materializes inside a
+    call, where the returned frame only shows the read-back)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    run()
+    lst = store.executionsList()
+    return [lst.apply(i).physicalPlanDescription()
+            for i in range(lst.size())
+            if lst.apply(i).executionId() >= before]
+
+
 def test_filter_and_projection_pushed_to_scan(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .where(F.col("lang") == "en").select("doc_id", "lang")
@@ -228,16 +241,35 @@ def test_resolution_nil_antijoin_is_broadcast(spark, sf_dir):
     from promptner_spark.operators import linking
     from promptner_spark.plans.queries import _oracle_mentions
 
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsCount()
-    m = _oracle_mentions(spark, sf_dir)
-    linking.build_resolution(m, linking.alias_df(spark), fuzzy=True)
-    lst = store.executionsList()
-    joined = []
-    for i in range(lst.size()):
-        q = lst.apply(i)
-        if q.executionId() >= before:
-            joined.append(q.physicalPlanDescription())
-    joined = "\n".join(joined)
+    joined = "\n".join(_executed_plans(
+        spark, lambda: linking.build_resolution(
+            _oracle_mentions(spark, sf_dir), linking.alias_df(spark),
+            fuzzy=True)))
     assert "SortMergeJoin" not in joined
     assert "BroadcastHashJoin" in joined
+
+
+def test_every_wiring_runs_the_keyed_emit(spark, sf_dir, tmp_path):
+    """The triples stage aggregates eids, never names, under both
+    boundary policies: the emit dictionary comes from the named
+    resolution stage, which run_pipeline writes like any other stage."""
+    from promptner_spark.plans.checkpoint import (
+        read_manifest, stage_is_complete,
+    )
+    from promptner_spark.plans.pipeline import build_pipeline, run_pipeline
+
+    def keyed(plan: str) -> bool:
+        return ("collect_set(eid" in plan
+                and "collect_set(entity_name" not in plan)
+
+    res = build_pipeline(spark, sf_dir)
+    assert keyed(_plan(res.triples))
+    res.unpersist()
+
+    root = str(tmp_path / "ckpt")
+    plans = _executed_plans(
+        spark, lambda: run_pipeline(spark, sf_dir, checkpoint_root=root))
+    emits = [p for p in plans if "collect_set" in p]
+    assert emits and all(keyed(p) for p in emits)
+    assert stage_is_complete(root, "resolution")
+    assert read_manifest(spark, root, "resolution").count() > 0
